@@ -5,14 +5,16 @@ serve).
 
 Run from the repository root:
 
-    python3 xorqbench/run.py --workload author_hit --seed 1 --seconds 20 --trace 0
+    python3 xorqbench/run.py --workload author_hit --seed 1 --seconds 15 --trace 0
 
 The first run compiles the program (src/main/scala) together with the
 benchmark sources (xorqbench/src) with the Scala compiler that ships in
 Spark's jars directory ($SPARK_HOME/jars, else the `unmanagedBase` named
 in build.sbt) into .bench_build/xorqbench/classes; later runs reuse the
-classes while the sources are unchanged. Each run then starts one JVM
-(xorqbench.Main) whose scratch space, java.io.tmpdir and Spark
+classes while the sources are unchanged. The first run at a scale
+factor generates the tables into .bench_build/xorqbench/tables/, which
+later runs reuse until the next compilation. Each run then starts one
+JVM (xorqbench.Main) whose scratch space, java.io.tmpdir and Spark
 directories live under .bench_build/xorqbench/runs/ and are removed
 afterwards.
 
@@ -39,7 +41,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build", "xorqbench")
 CLASSES = os.path.join(BUILD, "classes")
-WORKLOADS = ["author_hit", "param_miss", "serve_exchange"]
+TABLES = os.path.join(BUILD, "tables")
+WORKLOADS = ["author_hit", "serve_exchange"]
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 800
 
@@ -109,6 +112,7 @@ def build(jars):
     with open(os.path.join(tmp, "BUILD_STAMP"), "w") as f:
         f.write(digest)
     shutil.rmtree(CLASSES, ignore_errors=True)
+    shutil.rmtree(TABLES, ignore_errors=True)
     os.rename(tmp, CLASSES)
 
 
@@ -130,7 +134,8 @@ def run_jvm(jars, args, extra):
             "xorqbench.Main",
             "--workload", args.workload, "--seed", str(args.seed),
             "--seconds", str(args.seconds), "--trace", str(args.trace),
-            "--work", work, "--out", out] + extra
+            "--work", work, "--out", out,
+            "--tables", os.path.join(TABLES, f"sf{args.sf}")] + extra
     env = dict(os.environ, SPARK_LOCAL_DIRS=os.path.join(work, "spark-local"))
     p = subprocess.Popen(cmd, cwd=work, stdout=sys.stderr, stderr=sys.stderr,
                          env=env, start_new_session=True)
@@ -153,15 +158,13 @@ def main():
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     # self-test knobs
     ap.add_argument("--sf", default="0.1")
-    ap.add_argument("--setup-reps", default="3")
     ap.add_argument("--plant-wrong", type=int, choices=[0, 1], default=0)
     args = ap.parse_args()
     try:
         jars = spark_jars()
         build(jars)
         code, out = run_jvm(jars, args, [
-            "--sf", args.sf, "--setup-reps", args.setup_reps,
-            "--plant-wrong", str(args.plant_wrong)])
+            "--sf", args.sf, "--plant-wrong", str(args.plant_wrong)])
     except (subprocess.TimeoutExpired, OSError) as e:
         log(f"failed: {e}")
         return 2

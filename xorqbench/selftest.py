@@ -24,14 +24,13 @@ ROOT = os.path.dirname(HERE)
 SPEC = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
 E2E = {m["name"]: m["unit"] for m in SPEC["end_to_end"]}
 LAYER = {m["name"]: m["unit"] for m in SPEC["per_layer"]}
-# param_miss is not in BENCHMARK.json (see NOTES.md) but is kept working
-WORKLOADS = [w["name"] for w in SPEC["workloads"]] + ["param_miss"]
+WORKLOADS = [w["name"] for w in SPEC["workloads"]]
 
 
 def run(workload, trace, plant=0):
     cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
            "--seed", "7", "--seconds", "3", "--trace", str(trace),
-           "--sf", "0.001", "--setup-reps", "1", "--plant-wrong", str(plant)]
+           "--sf", "0.001", "--plant-wrong", str(plant)]
     p = subprocess.run(cmd, cwd=ROOT, stdout=subprocess.PIPE,
                        stderr=subprocess.DEVNULL, text=True, timeout=300)
     lines = p.stdout.strip().splitlines()

@@ -55,7 +55,8 @@ def main():
             for m in values:
                 values[m].append(res["metrics"][m]["value"])
             print(f"{w} seed {seed}: " + " ".join(
-                f"{m}={res['metrics'][m]['value']:.4g}" for m in values), flush=True)
+                f"{m}={res['metrics'][m]['value']:.4g}" for m in values)
+                + f" steal_s={detail['noise']['steal_s']:.2f}", flush=True)
         for m, vs in values.items():
             if len(vs) < 2:
                 continue

@@ -5,19 +5,14 @@ import graft.api.dsl._
 import graft.build.Build
 import graft.cache.ParquetDirStorage
 import graft.rel._
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.Path
 import scala.collection.mutable
 
-/** `author_hit` and `param_miss`: one client composes one of the three
-  * [[Plans]] per operation, executes it through the cache and checks
-  * the result.
-  *
-  *  - hit: the plans carry a fixed cutoff and set-up warms every
-  *    (plan, strategy) artifact, so every operation is a cache hit.
-  *  - miss: the cutoff is an `RParam` bound to a new value on every
-  *    operation, so every key is new.
+/** `author_hit`: one client composes one of the three [[Plans]] per
+  * operation, executes it through the cache and checks the result.
+  * Set-up warms every (plan, strategy) artifact, so every operation is
+  * a cache hit.
   *
   * The strategy alternates snapshot / mtime by operation; the plan
   * order is a seeded permutation of the three plans per block of three,
@@ -25,11 +20,8 @@ import scala.collection.mutable
   * saves its plan as a build artifact and loads it back (`xorq build`
   * then `xorq run`). */
 final class Algebra(spark: SparkSession, fx: Fixtures, root: Path,
-    seed: Long, miss: Boolean, trace: Trace, plant: Boolean)
+    seed: Long, trace: Trace, plant: Boolean)
     extends Workload {
-
-  /** Set for the traced window: counts are read at step boundaries. */
-  var meter: Option[Meter] = None
 
   private val rng = new scala.util.Random(seed)
   private val g = new GraftSession(spark,
@@ -38,9 +30,9 @@ final class Algebra(spark: SparkSession, fx: Fixtures, root: Path,
     exchangeRoots = Map.empty)
   private val builds = root.resolve("builds").toString
   private val cm = g.cacheManager
+  /** Misses the cache manager served since this set-up began. */
+  def cacheMisses: Int = cm.misses
 
-  /** Miss cutoffs: the whole range in a seeded order, never reused. */
-  private val cutoffs = rng.shuffle((Plans.cutoffLo until Plans.cutoffHi).toVector)
   private var order = Vector.empty[String]
   /** Operation `k`'s plan; negative `k` are untimed warm-up operations. */
   private def planOf(k: Int): String =
@@ -49,94 +41,51 @@ final class Algebra(spark: SparkSession, fx: Fixtures, root: Path,
       while (order.size <= k) order ++= rng.shuffle(Plans.names)
       order(k)
     }
+  val cycle: Int = Plans.names.size
   private def strategyOf(k: Int) =
     if (Math.floorMod(k, 2) == 0) "snapshot" else "mtime"
-  /** Miss cutoffs of warm-up operations lie below the drawn range. */
-  private def cutoffOf(k: Int): Int =
-    if (k < 0) Plans.cutoffLo + k else cutoffs(k % cutoffs.size)
 
-  /** Expected checksums by plan (hit), from the uncached lowering. */
+  /** Expected checksums by plan, from the uncached lowering. */
   private val expected = mutable.Map.empty[String, (Long, Long)]
-  /** Bound plan and checksum of each miss operation, checked later. */
-  private val missed = mutable.ArrayBuffer.empty[(Op, Rel, (Long, Long))]
-  /** Each plan as first composed, for reference results and sources. */
+  /** Each plan as composed in set-up, for the reference results. */
   private val composed = mutable.Map.empty[String, Rel]
-  /** Files under each plan's sources, which the mtime key lists. */
-  private val sourceFiles = mutable.Map.empty[String, Long]
 
-  private val hitCutoff: RExpr = L(Plans.day(Plans.defaultCutoff), "date")
-
-  private def compose(k: Int, cutoff: Option[Int]): GraftTable = {
-    val plan = planOf(k)
-    cutoff match {
-      case None => Plans.compose(g, fx, plan, hitCutoff, strategyOf(k))
-      case Some(v) =>
-        Plans.compose(g, fx, plan, Plans.cutoffParam, strategyOf(k))
-          .bindParams("cutoff" -> Plans.day(v))
-    }
+  def setup(): Unit = {
+    // warm every artifact under both strategies; the plans are
+    // independent, so they are composed and resolved concurrently
+    composed ++= Env.parallel(Plans.names.map(p =>
+      () => p -> Plans.compose(g, fx, p, "snapshot").rel))
+    Env.parallel(for ((_, rel) <- composed.toSeq; s <- Seq("snapshot", "mtime"))
+      yield () => cm.resolve(Plans.withStrategy(rel, s), g.bindings))
   }
-
-  private def uncached(rel: Rel): (Long, Long) =
-    Env.checksum(new Lower(spark, Map.empty, g.functions)
-      .lower(RelHash.cacheRelevant(rel)))
-
-  def setup(): Unit =
-    if (!miss) {
-      // warm every artifact under both strategies; the plans are
-      // independent, so they are composed and resolved concurrently
-      composed ++= Env.parallel(Plans.names.map(p =>
-        () => p -> Plans.compose(g, fx, p, hitCutoff, "snapshot").rel))
-      Env.parallel(for ((_, rel) <- composed.toSeq; s <- Seq("snapshot", "mtime"))
-        yield () => cm.resolve(Plans.withStrategy(rel, s), g.bindings))
-    } else {
-      // warm the miss path on cutoffs outside the drawn range
-      for (k <- 1 to Plans.names.size) operation(-k)
-    }
 
   def reference(): Unit = {
-    if (!miss) expected ++= Env.parallel(composed.toSeq.map { case (p, rel) =>
-      () => p -> uncached(rel) })
-    if (plant && !miss) expected(planOf(0)) = Report.wrong(expected(planOf(0)))
-    val conf = spark.sessionState.newHadoopConf()
-    for ((p, rel) <- composed) {
-      val leaves = Plans.cachePoints(rel).flatMap { case (in, _) => scans(in) }
-      sourceFiles(p) = leaves.distinct.map { s =>
-        val hp = new HPath(s)
-        val it = FileSystem.get(hp.toUri, conf).listFiles(hp, true)
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        n
-      }.sum
-    }
-  }
-
-  private def scans(r: Rel): Seq[String] = r match {
-    case ScanParquet(p) => Seq(p)
-    case other => other.children.flatMap(scans)
+    expected ++= Env.parallel(composed.toSeq.map { case (p, rel) =>
+      () => p -> Env.checksum(new Lower(spark, Map.empty, g.functions)
+        .lower(RelHash.cacheRelevant(rel)))
+    })
+    if (plant) expected(planOf(0)) = Report.wrong(expected(planOf(0)))
   }
 
   def operation(k: Int): Op = {
     val plan = planOf(k)
     val op = new Op(k, plan)
-    val cutoff = if (miss) Some(cutoffOf(k)) else None
-    val before = meter.map(_.snapshot())
-    op.startNs = System.nanoTime()
-    val t = trace.step(op, "api.construct_ms")(compose(k, cutoff))
-    val rel = t.rel
-    if (!composed.contains(plan)) composed(plan) = rel
-    val cs = if (!trace.on) {
-      checkBuild(op, rel, Build.load(builds, t.save(builds).hash))
-      Env.checksum(t.execute())
-    } else tracedExecute(op, t, plan)
-    op.endNs = System.nanoTime()
-    if (k < 0) ()
-    else if (miss) missed += ((op, rel, cs))
-    else if (cs != expected(plan))
-      op.fail(s"$plan checksum $cs, expected ${expected(plan)}")
-    for (b <- before; m <- meter) {
-      val d = Meter.delta(b, m.snapshot())
-      Report.counters(d).foreach { case (k2, v) => op.add(k2, v) }
+    val cs = metered(op) {
+      op.startNs = System.nanoTime()
+      val a0 = Probes.analyses.get
+      val t = trace.step(op, "api.construct_ms")(
+        Plans.compose(g, fx, plan, strategyOf(k)))
+      if (trace.on) op.add("api.construct_calls", Probes.analyses.get - a0)
+      val rel = t.rel
+      val cs = if (!trace.on) {
+        checkBuild(op, rel, Build.load(builds, t.save(builds).hash))
+        Env.checksum(t.execute())
+      } else tracedExecute(op, t)
+      op.endNs = System.nanoTime()
+      cs
     }
+    if (k >= 0 && cs != expected(plan))
+      op.fail(s"$plan checksum $cs, expected ${expected(plan)}")
     op
   }
 
@@ -144,10 +93,8 @@ final class Algebra(spark: SparkSession, fx: Fixtures, root: Path,
     if (loaded != rel) op.fail("Build.load returned a different plan")
 
   /** The steps `execute()` composes, called one at a time. */
-  private def tracedExecute(op: Op, t: GraftTable, plan: String)
-      : (Long, Long) = {
+  private def tracedExecute(op: Op, t: GraftTable): (Long, Long) = {
     val rel = t.rel
-    op.add("api.construct_calls", Plans.nodes(rel) + (if (miss) 1 else 0))
     val json = trace.step(op, "rel.json_ms")(RelJson.write(rel))
     op.add("rel.json_bytes", json.getBytes("UTF-8").length)
     trace.step(op, "rel.hash_ms")(RelHash.sha256(json))
@@ -158,10 +105,10 @@ final class Algebra(spark: SparkSession, fx: Fixtures, root: Path,
     val art = trace.step(op, "build.save_ms")(Build.save(rel, builds))
     checkBuild(op, rel,
       trace.step(op, "build.load_ms")(Build.load(builds, art.hash)))
-    val points = Plans.cachePoints(rel)
-    trace.step(op, "cache.key_ms")(points.foreach { case (in, s) => cm.key(in, s) })
-    op.add("cache.files_listed",
-      points.count(_._2 == "mtime") * sourceFiles(plan).toDouble)
+    val listed0 = Probes.listed.get
+    trace.step(op, "cache.key_ms")(Plans.cachePoints(rel).foreach {
+      case (in, s) => cm.key(in, s) })
+    op.add("cache.files_listed", Probes.listed.get - listed0)
     val (h0, m0) = (cm.hits, cm.misses)
     val resolved = trace.step(op, "cache.resolve_ms")(cm.resolve(rel, g.bindings))
     op.add("cache.hits", cm.hits - h0)
@@ -171,14 +118,7 @@ final class Algebra(spark: SparkSession, fx: Fixtures, root: Path,
     trace.step(op, "action_ms")(Env.checksum(df))
   }
 
-  def verify(ops: Seq[Op]): Unit =
-    for ((op, rel, cs) <- missed) {
-      val want = if (plant && op.id == 0) Report.wrong(uncached(rel))
-        else uncached(rel)
-      if (cs != want) op.fail(s"${op.kind} checksum $cs, expected $want")
-    }
-
-  def release(): Unit = missed.clear()
+  def verify(ops: Seq[Op]): Unit = ()
+  def release(): Unit = ()
   def teardown(): Unit = ()
-  def clients: Int = 1
 }

@@ -12,9 +12,14 @@ object Env {
 
   /** The same session settings as `graft.Bench`: local[nproc], shuffle
     * partitions = nproc, AQE on, UTC. Warehouse and scratch space live
-    * under the run's own root. */
-  def session(root: Path): SparkSession = {
-    val s = SparkSession.builder()
+    * under the run's own root. With `probes` (traced runs) local files
+    * are read through [[CountingLocalFs]] and every plan the analyzer
+    * checks is counted, so [[Probes]] sees what the program does. */
+  def session(root: Path, probes: Boolean): SparkSession = {
+    val b = SparkSession.builder()
+    if (probes) b.config("spark.hadoop.fs.file.impl", classOf[CountingLocalFs].getName)
+      .withExtensions(_.injectCheckRule(_ => _ => Probes.analyses.incrementAndGet()))
+    val s = b
       .master(s"local[$nproc]")
       .appName("xorqbench")
       .config("spark.sql.shuffle.partitions", nproc.toString)
@@ -96,11 +101,10 @@ object Env {
     }
 }
 
-/** TPC-H-shaped customer/orders/lineitem tables generated from a seed
-  * at scale factor `sf` (sf 1 = 150k customers, 1.5M orders, ~6M
-  * lines, the TPC-H cardinalities). Every value is a hash of (seed,
-  * column, row id), so the same seed gives the same tables whatever the
-  * partitioning. */
+/** TPC-H-shaped customer/orders/lineitem tables at scale factor `sf`
+  * (sf 1 = 150k customers, 1.5M orders, ~6M lines, the TPC-H
+  * cardinalities). Every value is a hash of (a fixed seed, column, row
+  * id), so the tables are the same whatever the partitioning. */
 final case class Fixtures(dir: String) {
   def customer: String = s"$dir/customer.parquet"
   def orders: String = s"$dir/orders.parquet"
@@ -108,6 +112,9 @@ final case class Fixtures(dir: String) {
 }
 
 object Fixtures {
+  /** The tables do not depend on a run's seed, so runs share them and
+    * the seed only draws what the workloads do with them. */
+  private val tableSeed = 1L
   /** First order date, and the span of order dates in days. */
   val epoch = "1992-01-01"
   val dateSpan = 2406
@@ -122,15 +129,14 @@ object Fixtures {
     Fixtures(dir.toString)
   }
 
-  def generate(spark: SparkSession, dir: String, sf: Double,
-      seed: Long): Fixtures = {
+  def generate(spark: SparkSession, dir: String, sf: Double): Fixtures = {
     val nCust = math.max(10L, (150000 * sf).toLong)
     val nOrd = math.max(10L, (1500000 * sf).toLong)
     val nPart = math.max(10L, (200000 * sf).toLong)
     val nSupp = math.max(10L, (10000 * sf).toLong)
     val parts = Env.nproc
     def h(tag: String, id: org.apache.spark.sql.Column) =
-      xxhash64(lit(seed), lit(tag), id)
+      xxhash64(lit(tableSeed), lit(tag), id)
     def u(tag: String, id: org.apache.spark.sql.Column, n: Long) =
       pmod(h(tag, id), lit(n))
     val fx = Fixtures(dir)

@@ -2,10 +2,7 @@ package xorqbench
 
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** The benchmark JVM: sets a workload up several times, drives it in a
   * closed loop for the measured window, checks every output and writes
@@ -13,26 +10,26 @@ import scala.jdk.CollectionConverters._
   * tail percentile, failures, layer detail) to `--out`.
   *
   * {{{
-  * Main --workload author_hit|param_miss|serve_exchange --seed N
-  *      --seconds S --trace 0|1 --work DIR --out DIR
-  *      [--sf 0.1] [--setup-reps 3] [--plant-wrong 1]
+  * Main --workload author_hit|serve_exchange --seed N
+  *      --seconds S --trace 0|1 --work DIR --out DIR --tables DIR
+  *      [--sf 0.1] [--plant-wrong 1]
   * }}}
   */
 object Main {
 
   final case class Args(workload: String, seed: Long, seconds: Double,
-      trace: Boolean, sf: Double, work: Path, out: Path, setupReps: Int,
+      trace: Boolean, sf: Double, work: Path, out: Path, tables: Path,
       plantWrong: Boolean)
 
-  val workloads = Seq("author_hit", "param_miss", "serve_exchange")
+  val workloads = Seq("author_hit", "serve_exchange")
+  /** Set-ups per run; `setup_s` is their median, so the first set-up's
+    * cold JVM does not set it. */
+  val setupReps = 3
   /** Untimed operations before the window, so it starts with the JIT
-    * and Spark's lazy state settled. */
-  val warmSeconds = 1.0
-  /** Concurrent serve clients. With nproc (4) every request waited
-    * behind up to three others and the median latency of a run moved
-    * by a fifth between seeds; with two the server is still saturated
-    * and the median moves by under a tenth (xorqbench/NOTES.md). */
-  val serveClients = 2
+    * and Spark's lazy state settled. With 1 s, author_hit's latencies
+    * still fell by about a tenth across the window; 5 s is about one
+    * operation per (plan, strategy). */
+  val warmSeconds = 5.0
 
   def parse(argv: Array[String]): Args = {
     val m = argv.grouped(2).map { case Array(k, v) => k.stripPrefix("--") -> v }
@@ -41,7 +38,7 @@ object Main {
     val a = Args(m("workload"), m("seed").toLong, m("seconds").toDouble,
       get("trace", "0") == "1", get("sf", "0.1").toDouble,
       Paths.get(m("work")).toAbsolutePath, Paths.get(m("out")).toAbsolutePath,
-      get("setup-reps", "3").toInt, get("plant-wrong", "0") == "1")
+      Paths.get(m("tables")).toAbsolutePath, get("plant-wrong", "0") == "1")
     require(workloads.contains(a.workload), s"unknown workload ${a.workload}")
     a
   }
@@ -69,30 +66,33 @@ object Main {
       phases(name) = phases.getOrElse(name, 0.0) + (System.nanoTime() - t) / 1e9
       r
     }
-    // the seeded tables are generated once, untimed; each set-up stages
-    // a copy, so set-up time is the program's and not the generator's
-    val generated = a.work.resolve("generated")
-    for (r <- 0 until a.setupReps) {
+    // the tables are generated untimed by the first run that needs them
+    // and kept for later runs; each set-up stages a copy, so set-up
+    // time is the program's and not the generator's
+    if (!Files.exists(a.tables)) {
+      val s = Env.session(a.work.resolve("generate"), a.trace)
+      val tmp = a.work.resolve("tables")
+      phase("generate")(Fixtures.generate(s, tmp.toString, a.sf))
+      s.stop()
+      Files.createDirectories(a.tables.getParent)
+      Files.move(tmp, a.tables, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    for (r <- 0 until setupReps) {
       if (wl != null) wl.teardown()
       if (spark != null) spark.stop()
       if (root != null) Env.deleteTree(root)
       root = a.work.resolve(s"setup$r")
-      if (r == 0) {
-        spark = Env.session(root)
-        phase("generate")(Fixtures.generate(spark, generated.toString, a.sf, a.seed))
-        spark.stop()
-      }
       val t0 = System.nanoTime()
-      spark = phase("session")(Env.session(root))
-      val fx = phase("fixtures")(Fixtures.stage(generated, root.resolve("fixtures")))
+      spark = phase("session")(Env.session(root, a.trace))
+      val fx = phase("fixtures")(Fixtures.stage(a.tables, root.resolve("fixtures")))
       // JVM and codegen warm-up, as graft.Bench does
       phase("warmup")(spark.range(100000).selectExpr("id % 7 k", "id v")
         .groupBy("k").count().collect())
       wl = phase("workload")(a.workload match {
-        case "author_hit" | "param_miss" => new Algebra(spark, fx, root,
-          a.seed, a.workload == "param_miss", trace, a.plantWrong)
+        case "author_hit" =>
+          new Algebra(spark, fx, root, a.seed, trace, a.plantWrong)
         case "serve_exchange" =>
-          new Serve(spark, fx, a.seed, serveClients, trace, a.plantWrong)
+          new Serve(spark, fx, a.seed, trace, a.plantWrong)
       })
       phase("workload")(wl.setup())
       setups += (System.nanoTime() - t0) / 1e9
@@ -105,41 +105,44 @@ object Main {
     }
 
     val meter = if (a.trace) Some(new Meter(spark)) else None
-    wl match {
-      case w: Algebra => w.meter = meter
-      case _ =>
-    }
+    wl.meter = meter
     trace.on = a.trace
-    val cacheRoot = root.resolve("cache")
-    val cache0 = Report.treeBytes(cacheRoot)
+    if (a.trace) {
+      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"),
+        spark.sessionState.newHadoopConf())
+      require(fs.isInstanceOf[CountingLocalFs],
+        s"traced run reads local files through ${fs.getClass}, not CountingLocalFs")
+    }
     System.gc()
-    val before = meter.map(_.snapshot())
-    val ops = new ConcurrentLinkedQueue[Op]()
-    val next = new AtomicInteger()
+    val ops = mutable.ArrayBuffer.empty[Op]
     val t0 = System.nanoTime()
     val deadline = t0 + (a.seconds * 1e9).toLong
-    def loop(): Unit = while (System.nanoTime() < deadline) {
-      val k = next.getAndIncrement()
+    val windowSteal0 = Env.stealSeconds()
+    while (System.nanoTime() < deadline || ops.size % wl.cycle != 0) {
+      val k = ops.size
       val s = System.nanoTime()
-      ops.add(try wl.operation(k) catch {
+      val steal = Env.stealSeconds()
+      val op = try wl.operation(k) catch {
         case e: Exception =>
           val op = new Op(k, "error")
           op.startNs = s; op.endNs = System.nanoTime()
           op.fail(e.toString)
           op
-      })
-    }
-    if (wl.clients == 1) loop()
-    else {
-      val ts = (0 until wl.clients).map(_ => new Thread(() => loop()))
-      ts.foreach(_.start()); ts.foreach(_.join())
+      }
+      op.stealS = Env.stealSeconds() - steal
+      ops += op
     }
     val windowS = (System.nanoTime() - t0) / 1e9
-    val window = meter.map(m => Meter.delta(before.get, m.snapshot()))
+    val windowSteal = Env.stealSeconds() - windowSteal0
     trace.on = false
-    val all = ops.asScala.toSeq.sortBy(_.id)
+    val all = ops.toSeq
     wl.verify(all)
-    val storeMb = (Report.treeBytes(cacheRoot) - cache0) / 1048576.0
+    // the cache store path runs in set-up, which writes every artifact
+    val storeMb = Report.treeBytes(root.resolve("cache")) / 1048576.0
+    val setupMisses = wl match {
+      case w: Algebra => w.cacheMisses
+      case _ => 0
+    }
     wl.release()
     val heap = Env.heapMb()
     wl.teardown()
@@ -147,7 +150,6 @@ object Main {
     val conf = Env.confSummary(spark)
     spark.stop()
     Env.deleteTree(root)
-    Env.deleteTree(generated)
 
     // ---------------------------------------------------------- metrics
     val lat = all.map(_.ms)
@@ -157,24 +159,18 @@ object Main {
     val e2e = Map(
       "setup_s" -> Report.median(setups.toSeq),
       "op_p50_ms" -> Report.median(lat), "op_tail_ms" -> tailV,
-      "ops_per_s" -> throughput(all.filter(_.ok), t0, deadline),
+      "ops_per_s" -> good / windowS,
       "heap_mb" -> heap)
     val e2eOut = Report.endToEnd.map { case (n, u) => (n, u, e2e(n)) }
     val layer: Map[String, Double] = if (!a.trace) Map.empty else {
       def col(k: String) = all.map(_.layer.getOrElse(k, 0.0))
-      // on the concurrent workload the listeners cannot attribute work
-      // to one operation: their window totals are spread evenly
-      val spread = window.filter(_ => wl.clients > 1)
-        .map(w => Report.counters(w).map { case (k, v) =>
-          k -> v / math.max(1, all.size) })
-        .getOrElse(Map.empty)
       val hits = col("cache.hits").sum
       val misses = col("cache.misses").sum
       Report.stepped.map(k => k -> Report.median(col(k))).toMap ++
-        Report.counted.map { case (k, _) =>
-          k -> spread.getOrElse(k, Report.mean(col(k))) }.toMap ++ Map(
+        Report.counted.map { case (k, _) => k -> Report.mean(col(k)) }.toMap ++ Map(
           "cache.hit_ratio" -> (if (hits + misses > 0) hits / (hits + misses) else 0.0),
-          "cache.store_mb" -> storeMb / math.max(1, all.size),
+          "cache.misses" -> setupMisses.toDouble,
+          "cache.store_mb" -> storeMb,
           "serve.http_errors" -> col("serve.http_errors").sum,
           "trace.op_p50_ms" -> Report.median(lat),
           "trace.self_sum_ms" -> Report.median(col("trace.self_sum_ms")))
@@ -199,37 +195,29 @@ object Main {
       "setup_s_each" -> setups.map(Report.num).mkString("[", ",", "]"),
       "phase_s_total" -> Report.obj(phases.toSeq.map { case (k, v) => k -> Report.num(v) }),
       "window_s" -> Report.num(windowS),
-      "op_ms" -> all.map(o => s"[${Report.str(o.kind)},${Report.num(o.ms)}]").mkString("[", ",", "]"),
+      "op_ms" -> all.map(o => s"[${Report.str(o.kind)},${Report.num(o.ms)},${Report.num(o.stealS)}]")
+        .mkString("[", ",", "]"),
       "noise" -> Report.obj(Seq(
         "steal_s" -> Report.num(Env.stealSeconds() - steal0),
+        "steal_window_s" -> Report.num(windowSteal),
         "load1_start" -> Report.num(load0), "load1_end" -> Report.num(Env.load1()),
-        "nproc" -> Env.nproc.toString, "clients" -> wl.clients.toString,
+        "nproc" -> Env.nproc.toString,
         "spark_conf" -> Report.obj(conf.toSeq.sorted.map { case (k, v) => k -> Report.str(v) }))),
-      "per_plan_structure" -> structure(all, a.trace && wl.clients == 1),
+      "per_plan_structure" -> structure(all, a.trace),
       "failures" -> failures.mkString("[", ",", "]")))
     Files.writeString(a.out.resolve("detail.json"), detail + "\n")
     trace.write(a.out.resolve("spans.jsonl"))
     bad
   }
 
-  /** Operations completed per second of the nominal window, an
-    * operation that straddles the deadline counting for the share of
-    * it that fell inside — so the figure does not jump by whole
-    * operations, nor depend on when the last client finishes. */
-  private def throughput(ops: Seq[Op], t0: Long, deadline: Long): Double =
-    ops.map { o =>
-      val in = math.min(o.endNs, deadline) - math.max(o.startNs, t0)
-      if (o.endNs > o.startNs) math.max(0L, in).toDouble / (o.endNs - o.startNs) else 0.0
-    }.sum / ((deadline - t0) / 1e9)
-
   /** Structural counts per operation kind, with every distinct value
-    * seen, so a count that does not repeat exactly shows. Only the
-    * 1-client workloads attribute counts to single operations. */
+    * seen, so a count that does not repeat exactly shows. */
   private def structure(all: Seq[Op], traced: Boolean): String =
     if (!traced) "{}"
     else Report.obj(all.groupBy(_.kind).toSeq.sortBy(_._1).map { case (kind, os) =>
       kind -> Report.obj(Seq("spark.jobs", "spark.stages", "catalyst.exchanges",
-        "cache.hits", "cache.misses", "cache.files_listed").map { k =>
+        "cache.hits", "cache.misses", "cache.files_listed",
+        "api.construct_calls").map { k =>
         val vs = os.map(_.layer.getOrElse(k, 0.0)).distinct.sorted
         k -> vs.map(Report.num).mkString("[", ",", "]")
       })

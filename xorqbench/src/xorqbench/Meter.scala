@@ -95,3 +95,36 @@ object Meter {
   def delta(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
     b.map { case (k, v) => k -> (v - a.getOrElse(k, 0L)) }
 }
+
+/** Counts of what the program asks of the analyzer and the file system,
+  * read around single steps of a traced author_hit operation. They are
+  * filled by the check rule and the file system that [[Env.session]]
+  * installs in traced runs. */
+object Probes {
+  /** Logical plans checked by the analyzer: one per DataFrame built. */
+  val analyses = new AtomicLong()
+  /** Entries returned by local directory listings. */
+  val listed = new AtomicLong()
+}
+
+/** The local file system, counting the entries its listings return
+  * into [[Probes.listed]]. `FileSystem.listFiles` walks a tree through
+  * `listLocatedStatus`, and `listStatusIterator` pages through
+  * `listStatus`, so these two overrides see every listing once. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path,
+    RemoteIterator}
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val r = super.listStatus(f)
+    Probes.listed.addAndGet(r.length)
+    r
+  }
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    val it = super.listLocatedStatus(f)
+    new RemoteIterator[LocatedFileStatus] {
+      def hasNext: Boolean = it.hasNext
+      def next(): LocatedFileStatus = { Probes.listed.incrementAndGet(); it.next() }
+    }
+  }
+}

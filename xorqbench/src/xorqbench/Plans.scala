@@ -6,24 +6,16 @@ import graft.rel._
 
 /** The algebra plans the workloads compose through the fluent API.
   * Each carries a `.cache()` point above its join/aggregate and a date
-  * cutoff below it: a literal for the cache-hit workload, an `RParam`
-  * bound per operation for the cache-miss workload. Money is summed as
+  * cutoff below it. Money is summed as
   * DECIMAL so results are exact and checksums do not depend on the
   * summation order. */
 object Plans {
   val names: Seq[String] = Seq("q3", "q1", "topn")
 
-  /** Cutoffs are day offsets from [[Fixtures.epoch]]; the miss workload
-    * draws them from this range, so every filter keeps most rows and
-    * operations cost about the same. */
-  val cutoffLo = 1800
-  val cutoffHi: Int = Fixtures.dateSpan
-  val defaultCutoff = 2200
-
-  def day(offset: Int): String =
-    java.time.LocalDate.parse(Fixtures.epoch).plusDays(offset).toString
-
-  def cutoffParam: RExpr = param("cutoff", "date", Some(day(defaultCutoff)))
+  /** The date cutoff, 2200 days after [[Fixtures.epoch]] (of 2406 in
+    * the data), so every filter keeps most rows. */
+  private val cutoff: RExpr = L(java.time.LocalDate.parse(Fixtures.epoch)
+    .plusDays(2200).toString, "date")
 
   private val money = "decimal(12,2)"
   private def revenue: RExpr = agg("sum",
@@ -31,7 +23,7 @@ object Plans {
 
   /** Compose plan `name` through the fluent API; every builder call
     * validates eagerly, as in a user session. */
-  def compose(g: GraftSession, fx: Fixtures, name: String, cutoff: RExpr,
+  def compose(g: GraftSession, fx: Fixtures, name: String,
       strategy: String): GraftTable = name match {
     case "q3" => // the SparkEntry.entry shape, with an order-date cutoff
       g.readParquet(fx.lineitem)
@@ -78,9 +70,6 @@ object Plans {
             Seq(desc(c("revenue")), asc(c("o_orderkey"))), None))
         .filter(c("rn") <= i(3))
   }
-
-  /** Number of plan nodes: each is one fluent builder call. */
-  def nodes(rel: Rel): Int = 1 + rel.children.map(nodes).sum
 
   /** `rel` with every cache point switched to `strategy`. */
   def withStrategy(rel: Rel, strategy: String): Rel = rel.transformUp {

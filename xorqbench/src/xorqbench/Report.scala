@@ -9,12 +9,27 @@ trait Workload {
   /** Expected outputs for inputs known before the window (untimed). */
   def reference(): Unit
   def operation(k: Int): Op
-  def clients: Int
+  /** Operations in one round of the workload's mix. The window ends on
+    * a whole round, so every run measures the same mix. */
+  def cycle: Int
   /** Output checks that need the window's inputs (untimed). */
   def verify(ops: Seq[Op]): Unit
   /** Drop the benchmark's own buffers before the heap is measured. */
   def release(): Unit
   def teardown(): Unit
+
+  /** Set for the traced window: counts are read around each operation. */
+  var meter: Option[Meter] = None
+
+  /** Runs `f`, adding to `op` the listener counts it caused when the
+    * run is traced. */
+  protected def metered[T](op: Op)(f: => T): T = {
+    val before = meter.map(_.snapshot())
+    val r = f
+    for (b <- before; m <- meter)
+      Report.counters(Meter.delta(b, m.snapshot())).foreach { case (k, v) => op.add(k, v) }
+    r
+  }
 }
 
 /** Metric names, units and aggregation. */
@@ -31,12 +46,10 @@ object Report {
     "build.load_ms", "arrow.encode_ms", "arrow.decode_ms",
     "serve.ttfb_ms", "serve.stream_ms")
 
-  /** Per-layer metrics counted per operation (or, from the listeners
-    * on the concurrent workload, over the window): mean per operation. */
+  /** Per-layer metrics counted per operation: mean per operation. */
   val counted: Seq[(String, String)] = Seq(
     "api.construct_calls" -> "count", "rel.json_bytes" -> "B",
     "cache.files_listed" -> "count", "cache.hits" -> "count",
-    "cache.misses" -> "count",
     "catalyst.analysis_ms" -> "ms", "catalyst.optimization_ms" -> "ms",
     "catalyst.planning_ms" -> "ms", "catalyst.exchanges" -> "count",
     "spark.exec_ms" -> "ms", "spark.jobs" -> "count",
@@ -46,8 +59,11 @@ object Report {
     "spark.output_mb" -> "MB", "spark.gc_ms" -> "ms",
     "arrow.bytes_sent" -> "B", "arrow.bytes_received" -> "B")
 
-  /** Whole-run per-layer metrics. */
+  /** Whole-run per-layer metrics. `cache.misses` and `cache.store_mb`
+    * count from the start of the last set-up, whose cache warm-up is
+    * the store path. */
   val whole: Seq[(String, String)] = Seq(
+    "cache.misses" -> "count",
     "cache.hit_ratio" -> "ratio", "cache.store_mb" -> "MB",
     "serve.http_errors" -> "count",
     "trace.op_p50_ms" -> "ms", "trace.self_sum_ms" -> "ms")
@@ -88,13 +104,16 @@ object Report {
 
   /** The highest percentile with at least ten samples beyond it: the
     * eleventh-largest latency. Returns (value, percentile, samples
-    * beyond); with ten or fewer samples it is the smallest latency. */
+    * beyond). With twenty or fewer samples that percentile is at or
+    * below the median; the tail is then the median of the slowest
+    * third of the samples (rounded up to an odd count), so one
+    * operation that a burst of host steal slowed does not set it. */
   def tail(xs: Seq[Double]): (Double, Double, Int) = {
     val s = xs.sorted
     val n = s.size
-    if (n > 10) (s(n - 11), 100.0 * (n - 10) / n, 10)
-    else if (n > 0) (s(0), 100.0 / n, n - 1)
-    else (0.0, 0.0, 0)
+    val beyond = if (n > 20) 10 else (n + 2) / 3 / 2
+    if (n == 0) (0.0, 0.0, 0)
+    else (s(n - 1 - beyond), 100.0 * (n - beyond) / n, beyond)
   }
 
   def mean(xs: Seq[Double]): Double =

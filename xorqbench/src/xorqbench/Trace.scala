@@ -11,6 +11,8 @@ final case class Span(op: Int, name: String, parent: String,
 final class Op(val id: Int, val kind: String) {
   var startNs = 0L
   var endNs = 0L
+  /** Host steal seconds (all CPUs) while the operation ran. */
+  var stealS = 0.0
   var ok = true
   var error = ""
   val layer: mutable.Map[String, Double] = mutable.LinkedHashMap.empty
