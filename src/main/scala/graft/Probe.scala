@@ -62,8 +62,8 @@ object Probe {
     val t0 = System.nanoTime()
     body
     val sec = (System.nanoTime() - t0) / 1e9
-    // let the listener bus drain the final stage events
-    Thread.sleep(400)
+    // the final stage events reach the listener asynchronously
+    org.apache.spark.sql.graft.ListenerDrain(spark.sparkContext)
     spark.sparkContext.removeSparkListener(m)
     spark.sparkContext.setJobDescription(null)
     println(f"[meter] $label%-34s $sec%8.3f s  jobs=${m.jobs.get}%-3d " +

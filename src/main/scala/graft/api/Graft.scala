@@ -9,9 +9,16 @@ import org.apache.spark.sql.types.StructType
 /** The user-facing fluent surface — the analogue of the reference's
   * `Expr` API (vendor/ibis/expr/types/relations.py): every call builds
   * a new immutable [[Rel]] and EAGERLY validates it by analyzing the
-  * lowered plan (`df.schema` — analysis only, no job), matching xorq's
-  * fail-fast construction UX (vendor relations.py:225-259) instead of
-  * Spark's lazy analysis.
+  * lowered plan, matching xorq's fail-fast construction UX (vendor
+  * relations.py:225-259) instead of Spark's lazy analysis.
+  *
+  * Validation is incremental: a call lowers only the node it adds, on
+  * top of the already-analyzed frames of its input tables, so each
+  * call analyzes one new plan node (none for the transparent
+  * `cache`/`tag`/`tee`) and each leaf scan — whose parquet schema
+  * inference is a Spark job — is resolved once per composition, not
+  * once per later call. Execution still lowers the whole plan afresh,
+  * after cache resolution ([[GraftTable.execute]]).
   *
   * A [[GraftSession]] owns the Spark session, the unbound-table
   * bindings, and the cache storages; tables flow through the algebra so
@@ -108,16 +115,30 @@ final class GraftSession(
 
 final case class GraftTable(rel: Rel, session: GraftSession) {
 
+  /** The tables this one was built on, kept only until `df` is forced:
+    * afterwards the frame holds their analyzed plans, and keeping the
+    * tables too would pin every intermediate frame of a chain. */
+  private var inputs: Seq[GraftTable] = Nil
+
   /** Analyzed lowering (no execution) — also the fail-fast validation:
-    * construction of an invalid plan throws here, eagerly. */
-  lazy val df: DataFrame =
-    new Lower(session.spark, session.bindings, session.functions).lower(rel)
+    * construction of an invalid plan throws here, eagerly. Only `rel`'s
+    * own node is lowered; the input tables' sub-plans are taken as the
+    * frames those tables already analyzed. */
+  lazy val df: DataFrame = {
+    val lowered = inputs.map(t => t.rel -> t.df)
+    inputs = Nil
+    new Lower(session.spark, session.bindings, session.functions, lowered)
+      .lower(rel)
+  }
 
   lazy val schema: StructType = df.schema
 
-  private def next(r: Rel): GraftTable = {
+  /** The table for `r`, a plan over this table's and `others`' plans,
+    * validated now: fail at construction, xorq-style. */
+  private def next(r: Rel, others: GraftTable*): GraftTable = {
     val t = GraftTable(r, session)
-    t.schema // force analysis: fail at construction, xorq-style
+    t.inputs = this +: others
+    t.schema
     t
   }
 
@@ -146,12 +167,12 @@ final case class GraftTable(rel: Rel, session: GraftSession) {
   }
   def filter(pred: RExpr): GraftTable = next(Filter(rel, pred))
   def join(other: GraftTable, how: String, on: RExpr*): GraftTable =
-    next(Join(rel, other.rel, how, on))
+    next(Join(rel, other.rel, how, on), other)
   def asofJoin(other: GraftTable, on: Seq[String], leftTime: String,
       rightTime: String, rightCols: Seq[(String, String)],
       tolerance: Option[String] = None): GraftTable =
     next(AsofJoinRel(rel, other.rel, on, leftTime, rightTime, rightCols,
-      tolerance))
+      tolerance), other)
   def groupBy(keys: (String, RExpr)*)(aggs: (String, RExpr)*): GraftTable =
     next(Aggregate(rel, keys, aggs))
   def orderBy(keys: SortKey*): GraftTable = next(Sort(rel, keys))
@@ -162,11 +183,11 @@ final case class GraftTable(rel: Rel, session: GraftSession) {
       keepFirst: Boolean = true): GraftTable =
     next(Distinct(rel, on, orderBy, keepFirst))
   def unionAll(o: GraftTable): GraftTable =
-    next(SetOp("union_all", rel, o.rel))
-  def union(o: GraftTable): GraftTable = next(SetOp("union", rel, o.rel))
+    next(SetOp("union_all", rel, o.rel), o)
+  def union(o: GraftTable): GraftTable = next(SetOp("union", rel, o.rel), o)
   def intersect(o: GraftTable): GraftTable =
-    next(SetOp("intersect", rel, o.rel))
-  def except(o: GraftTable): GraftTable = next(SetOp("except", rel, o.rel))
+    next(SetOp("intersect", rel, o.rel), o)
+  def except(o: GraftTable): GraftTable = next(SetOp("except", rel, o.rel), o)
   def sample(fraction: Double, seed: Long): GraftTable =
     next(Sample(rel, fraction, seed))
   def fillNull(repl: (String, String)*): GraftTable =
@@ -211,7 +232,7 @@ final case class GraftTable(rel: Rel, session: GraftSession) {
   def fit(steps: StepSpec*): GraftTable = next(FitRel(rel, steps))
   /** Apply a fitted model relation to this table. */
   def transformWith(model: GraftTable, steps: StepSpec*): GraftTable =
-    next(TransformRel(rel, model.rel, steps))
+    next(TransformRel(rel, model.rel, steps), model)
 
   // --------------------------------------------------------- lifecycle
   def bindParams(values: (String, String)*): GraftTable =

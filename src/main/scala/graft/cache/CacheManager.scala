@@ -81,10 +81,13 @@ final class CacheManager(
     }
   }
 
-  /** Number of cache misses served (computed + stored) — test/metrics. */
-  @volatile var misses: Int = 0
+  private val missCount = new java.util.concurrent.atomic.AtomicInteger
+  private val hitCount = new java.util.concurrent.atomic.AtomicInteger
+  /** Number of cache misses served (computed + stored) — test/metrics;
+    * exact under concurrent [[resolve]] calls. */
+  def misses: Int = missCount.get
   /** Number of cache hits served. */
-  @volatile var hits: Int = 0
+  def hits: Int = hitCount.get
 
   /** Compute the full cache key of a Cache node's input under a
     * strategy. */
@@ -121,10 +124,10 @@ final class CacheManager(
         val k = key(input, strategy) // original subtree, pre-rewrite
         registry(k) = input
         if (!storage.exists(k)) {
-          misses += 1
+          missCount.incrementAndGet()
           val df = mkLower(bindings).lower(resolve(input, bindings))
           storage.store(k, df)
-        } else hits += 1
+        } else hitCount.incrementAndGet()
         writeSidecar(storage.path(k), input)
         PinnedRead(storage.path(k), k)
 

@@ -14,15 +14,24 @@ import org.apache.spark.sql.functions._
   * vendor/ibis/backends/sql) collapsed to a direct plan construction.
   *
   * @param bindings runtime catalog for [[UnboundTable]] resolution
+  * @param lowered sub-plans already lowered, matched by reference
+  *   (`eq`), not by structure: each is returned as given instead of
+  *   being lowered again — how the fluent API lowers only the node a
+  *   builder call adds on top of its inputs' analyzed frames
   */
 final class Lower(
     spark: SparkSession,
     bindings: Map[String, DataFrame] = Map.empty,
-    catalog: graft.udf.FunctionCatalog = graft.udf.FunctionCatalog.empty) {
+    catalog: graft.udf.FunctionCatalog = graft.udf.FunctionCatalog.empty,
+    lowered: Seq[(Rel, DataFrame)] = Nil) {
 
   def apply(rel: Rel): DataFrame = lower(rel)
 
-  def lower(rel: Rel): DataFrame = rel match {
+  def lower(rel: Rel): DataFrame =
+    lowered.collectFirst { case (r, df) if r eq rel => df }
+      .getOrElse(lowerNode(rel))
+
+  private def lowerNode(rel: Rel): DataFrame = rel match {
     case ScanParquet(path) => spark.read.parquet(path)
 
     case ScanArrow(path) => graft.interop.ArrowIpc.read(spark, path)

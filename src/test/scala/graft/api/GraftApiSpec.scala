@@ -2,8 +2,12 @@ package graft.api
 
 import graft.SparkSpec
 import graft.api.dsl._
-import graft.rel.RelHash
+import graft.rel._
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col => c0}
 
 class GraftApiSpec extends SparkSpec {
 
@@ -84,11 +88,149 @@ class GraftApiSpec extends SparkSpec {
       li.selectCols(startsWith("no_such_prefix")))
   }
 
+  /** The result of `body` and the Spark jobs it ran on this thread,
+    * counted by a listener after the bus has delivered every event. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-api-jobs-${System.nanoTime}"
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          n.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "graft api job count")
+    try {
+      val r = body
+      org.apache.spark.sql.graft.ListenerDrain(sc)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** `df`'s rows as sorted strings, for order-free comparison. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** `t`'s plan lowered from scratch, without the fluent API's frames. */
+  private def fromScratch(t: GraftTable): DataFrame =
+    new Lower(spark, t.session.bindings, t.session.functions).lower(t.rel)
+
   test("construction is fail-fast: a bad column throws at build time") {
     val g = session
     val t = g.readParquet(s"$sfDir/nation.parquet")
     intercept[Exception] { t.select("x" -> c("no_such_column")) }
     intercept[Exception] { t.filter(c("n_name") > c("missing")) }
+
+    // deep in a chain: the new node is validated against its input
+    val deep = t.filter(c("n_regionkey") >= i(0))
+      .select("n" -> c("n_name"), "rk" -> c("n_regionkey"))
+      .distinct
+      .orderBy(asc(c("n")))
+      .limit(20)
+      .select("n" -> c("n"))
+    intercept[Exception] { deep.filter(c("no_such_column") > i(0)) }
+    intercept[Exception] { deep.groupBy("k" -> c("missing"))("n" -> countAll) }
+
+    // inside the other side of a join: a join key it lacks, and an
+    // input table that was never validated itself
+    val r = g.readParquet(s"$sfDir/region.parquet")
+    intercept[Exception] {
+      t.join(r, "inner", c("n_regionkey") === c("no_such_key"))
+    }
+    val unchecked = GraftTable(
+      Project(r.rel, Seq("x" -> RCol("no_such_column"))), g)
+    intercept[Exception] {
+      t.join(unchecked, "inner", c("n_regionkey") === c("x"))
+    }
+
+    // above a cache point, which lowers transparently
+    intercept[Exception] {
+      t.cache().groupBy("k" -> c("no_such_column"))("n" -> countAll)
+    }
+  }
+
+  test("construction is linear: each parquet scan is inferred once, " +
+    "and later builder calls run no Spark job") {
+    val g = session
+    // one schema-inference job per scan, none for any builder call
+    val (q3, composeJobs) = jobsIn {
+      g.readParquet(s"$sfDir/lineitem.parquet")
+        .join(g.readParquet(s"$sfDir/orders.parquet")
+          .filter(c("o_orderdate") < L("1995-03-15", "date")),
+          "inner", c("l_orderkey") === c("o_orderkey"))
+        .join(g.readParquet(s"$sfDir/customer.parquet")
+          .filter(c("c_mktsegment") === L("BUILDING")),
+          "inner", c("o_custkey") === c("c_custkey"))
+        .groupBy("l_orderkey" -> c("l_orderkey"),
+          "o_orderdate" -> c("o_orderdate"))(
+          "revenue" -> agg("sum",
+            c("l_extendedprice") * (d(1.0) - c("l_discount"))))
+        .cache()
+        .orderBy(desc(c("revenue")), asc(c("l_orderkey")))
+        .limit(10)
+    }
+    assert(composeJobs == 3)
+
+    val (deeper, deeperJobs) = jobsIn {
+      q3.filter(c("revenue") > d(0.0))
+        .select("k" -> c("l_orderkey"), "r" -> c("revenue"))
+        .tag("stage", "report")
+        .orderBy(asc(c("k")))
+        .limit(5)
+        .distinct
+    }
+    assert(deeperJobs == 0)
+    assert(deeper.schema.fieldNames.toSeq == Seq("k", "r"))
+    // cache/tag/tee add no analysis: they return their input's frame
+    assert(q3.cache().df eq q3.df)
+    assert(q3.tag("k", "v").df eq q3.df)
+    assert(q3.tee(s"${Files.createTempDirectory("graft_tee_")}/s").df eq
+      q3.df)
+  }
+
+  test("inputs that share a frame (union with itself, self-join, a " +
+    "model fit on the same table) match a from-scratch lowering") {
+    val g = session
+    val t = g.readParquet(s"$sfDir/nation.parquet")
+      .filter(c("n_regionkey") < i(3))
+    val n = t.df.count()
+
+    val doubled = t.unionAll(t)
+    assert(doubled.df.count() == 2 * n)
+    assert(rowsOf(doubled.df) == rowsOf(fromScratch(doubled)))
+
+    val selfJoin = t.join(
+      t.select("m_name" -> c("n_name"), "m_regionkey" -> c("n_regionkey")),
+      "inner", c("n_regionkey") === c("m_regionkey"))
+    assert(rowsOf(selfJoin.df) == rowsOf(fromScratch(selfJoin)))
+    assert(selfJoin.df.count() > n)
+
+    val li = g.readParquet(s"$sfDir/lineitem.parquet")
+      .select("l_quantity" -> c("l_quantity"),
+        "l_extendedprice" -> c("l_extendedprice"))
+    val steps = Seq(ScaleSpec("l_quantity", "qs"),
+      LinRegSpec("qs", "l_extendedprice", "pred"))
+    val scored = li.transformWith(li.fit(steps: _*), steps: _*)
+    // the fitted doubles may differ in the last bits between the two
+    // fits (summation order), so compare them with a tolerance
+    def sorted(df: DataFrame) =
+      df.orderBy(c0("l_quantity"), c0("l_extendedprice")).collect()
+    val (got, want) = (sorted(scored.df), sorted(fromScratch(scored)))
+    assert(scored.schema.fieldNames.toSeq ==
+      Seq("l_quantity", "l_extendedprice", "qs", "pred"))
+    assert(got.length == want.length && got.length > 0)
+    got.zip(want).foreach { case (a, b) =>
+      (0 until a.length).foreach { k =>
+        assert(math.abs(a.getDouble(k) - b.getDouble(k)) <=
+          1e-9 * math.max(1.0, math.abs(b.getDouble(k))))
+      }
+    }
   }
 
   test("cache() + execute() round-trips through the artifact store") {

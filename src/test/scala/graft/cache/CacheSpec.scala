@@ -2,6 +2,7 @@ package graft.cache
 
 import graft.SparkSpec
 import graft.rel._
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 
 class CacheSpec extends SparkSpec {
@@ -195,5 +196,41 @@ class CacheSpec extends SparkSpec {
     assert(!storage.exists(ka))
     mgr.execute(a).collect()
     assert(mgr.misses == 2)
+  }
+
+  test("hit and miss counters stay exact under concurrent resolve") {
+    // a store that only records keys: no Spark job per miss, so many
+    // resolves contend on the counters at once
+    val root = Files.createTempDirectory("graft_cache_conc_").toString
+    val stored = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val storage = new CacheStorage {
+      def exists(key: String): Boolean = stored.contains(key)
+      def path(key: String): String = s"$root/$key"
+      def store(key: String, df: DataFrame): Unit = { stored.add(key); () }
+      def drop(key: String): Unit = { stored.remove(key); () }
+    }
+    val mgr = new CacheManager(spark, Map("default" -> storage))
+    // four distinct nodes, each resolved by many threads
+    val nodes = (1 to 4).map(k => Cache(
+      InMemory(Seq("k" -> "int"), Seq(Seq(k.toString))),
+      "default", "snapshot"))
+    val (threads, perThread) = (8, 200)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val done = (0 until threads).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            start.await()
+            (0 until perThread).foreach(i =>
+              mgr.resolve(nodes((t + i) % nodes.size)))
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    assert(mgr.hits + mgr.misses == threads * perThread)
+    assert(mgr.misses >= nodes.size && stored.size == nodes.size)
   }
 }
