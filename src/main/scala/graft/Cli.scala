@@ -2,7 +2,6 @@ package graft
 
 import graft.build.{Build, Catalog}
 import graft.rel.{RelHash, RelJson}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** `xorq build`/`run`-style artifact lifecycle over saved plans
@@ -44,7 +43,7 @@ object Cli {
     case "run" :: dir :: ref :: out :: Nil =>
       val hash = resolve(dir, ref)
       val rel = Build.load(dir, hash)
-      val spark = session()
+      val spark = LocalSpark()
       // the full execute() path: cache/tee/exchange effects resolved,
       // builtin UDXFs resolvable — an artifact referencing them runs
       // with no access to the code that built it
@@ -62,7 +61,7 @@ object Cli {
     // dependency surface + result fingerprint, later re-execute and
     // classify any divergence as source Drift vs true Mismatch.
     case "lineage" :: dir :: ref :: Nil =>
-      val spark = session()
+      val spark = LocalSpark()
       println(graft.build.Lineage
         .capture(dir, resolve(dir, ref), spark).toJson)
       spark.stop()
@@ -79,12 +78,12 @@ object Cli {
         }
 
     case "record" :: dir :: ref :: Nil =>
-      val spark = session()
+      val spark = LocalSpark()
       println(graft.build.Replay.record(dir, resolve(dir, ref), spark).toJson)
       spark.stop()
 
     case "verify" :: dir :: ref :: Nil =>
-      val spark = session()
+      val spark = LocalSpark()
       val outcome = graft.build.Replay.verify(dir, resolve(dir, ref), spark)
       println(s"""{"outcome":"$outcome"}""")
       spark.stop()
@@ -104,7 +103,7 @@ object Cli {
     // — `xorq serve` for artifacts: another process lists/fetches/runs
     // them with data handed off via parquet paths.
     case "serve" :: dir :: portStr :: Nil =>
-      val spark = session()
+      val spark = LocalSpark()
       val registry = new graft.serve.Registry(spark)
       Build.list(dir).foreach(h => registry.servePlan(h, Build.load(dir, h)))
       new Catalog(dir).aliases.foreach { case (n, h) =>
@@ -139,17 +138,4 @@ object Cli {
     if (ref.length == 64) ref
     else new Catalog(dir).resolve(ref).getOrElse(
       sys.error(s"unknown alias '$ref'"))
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

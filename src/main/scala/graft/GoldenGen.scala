@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 
@@ -109,17 +108,7 @@ object GoldenGen {
     }
     nameFilter.foreach(n => require(SparkEntry.queries.contains(n),
       s"GoldenGen: unknown query '$n'"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-golden")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh_").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark(4)
     val targets = SparkEntry.queries.toSeq.sortBy(_._1).filter {
       case (n, _) =>
         (shardFilter.isEmpty || shardFilter.contains(shardOf(n))) &&

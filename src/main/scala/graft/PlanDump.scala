@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-only: dump `explain(formatted)` of named queries to
@@ -21,16 +20,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark()
     new java.io.File(outDir).mkdirs()
     SparkEntry.all.filter(d => names(d.name)).foreach { d =>
       val plan = d.fn(spark, sfDir).queryExecution.explainString(

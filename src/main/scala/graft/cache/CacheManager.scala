@@ -71,13 +71,8 @@ final class CacheManager(
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(RelJson.parse(bytes.toString("UTF-8")))
-      } finally in.close()
+      try Some(RelJson.parse(new String(in.readAllBytes(), "UTF-8")))
+      finally in.close()
     }
   }
 
@@ -91,16 +86,19 @@ final class CacheManager(
 
   /** Compute the full cache key of a Cache node's input under a
     * strategy. */
-  def key(input: Rel, strategy: String): String = {
-    val base = RelHash.cacheHash(input)
-    strategy match {
-      case "snapshot" => base
-      case "mtime" =>
-        RelHash.sha256(base + "|" + sourceToken(input))
-      case other =>
-        throw new IllegalArgumentException(s"unknown strategy '$other'")
-    }
+  def key(input: Rel, strategy: String): String = strategy match {
+    case "snapshot" => RelHash.cacheHash(input)
+    case "mtime" => mtimeKey(RelHash.cacheHash(input), input)
+    case other =>
+      throw new IllegalArgumentException(s"unknown strategy '$other'")
   }
+
+  /** The mtime key: `base` (the input's content hash) bound to the
+    * source token of its file-backed leaves. Keys name artifact
+    * directories on disk, so this format must never change. Throws
+    * IllegalArgumentException when a leaf cannot be fingerprinted. */
+  private def mtimeKey(base: String, input: Rel): String =
+    RelHash.sha256(base + "|" + sourceToken(input))
 
   /** The pre-lowering EFFECTS pass: replace every [[Cache]] node with a
     * [[PinnedRead]] of its (computed-on-miss) artifact, perform every
@@ -175,7 +173,7 @@ final class CacheManager(
         val base = RelHash.cacheHash(input)
         val k =
           if (target.startsWith("snapshot+")) base
-          else try RelHash.sha256(base + "|" + sourceToken(input))
+          else try mtimeKey(base, input)
           catch {
             case e: IllegalArgumentException =>
               throw new IllegalArgumentException(
@@ -241,7 +239,7 @@ final class CacheManager(
   private[graft] def possibleKeys(input: Rel): Set[String] = {
     val base = RelHash.cacheHash(input)
     val mtime =
-      try Some(RelHash.sha256(base + "|" + sourceToken(input)))
+      try Some(mtimeKey(base, input))
       catch { case _: IllegalArgumentException => None }
     Set(base) ++ mtime
   }

@@ -41,7 +41,7 @@ object LabelProp {
     var labels = labels0
     val byCount = Window.partitionBy("node")
       .orderBy(col("cnt").desc, col("label"))
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { round =>
       val lb = JoinHints.maybeBroadcast(
         labels.withColumnRenamed("node", "__n"), nodeN)
       labels = e.join(lb, e("dst") === col("__n"))
@@ -52,8 +52,10 @@ object LabelProp {
         .select(col("node"), col("label"))
         // lazy per-round cut: materializes inside the next round's
         // label-vector broadcast build instead of a dedicated job
-        // (the PageRank r16 pattern); hints stay count-driven
-        .localCheckpoint(false)
+        // (the PageRank r16 pattern); hints stay count-driven. The
+        // last round is eager, so every round runs before `e` is
+        // unpersisted below
+        .localCheckpoint(eager = round == iters)
     }
     e.unpersist()
     labels

@@ -51,7 +51,7 @@ object PageRank {
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
     val outdegB = JoinHints.maybeBroadcast(outdeg, nRows)
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { round =>
       val ranksB = JoinHints.maybeBroadcast(ranks, nRows)
       // left_anti builds its RIGHT side — hint outdeg, not ranks
       val dangling = ranks.join(outdegB, ranks("node") === outdeg("src"),
@@ -75,8 +75,11 @@ object PageRank {
         // (the rank-vector broadcast build / dangling aggregate)
         // instead of paying a dedicated eager job per round; the
         // join decisions don't need leaf stats — the rank/contrib
-        // hints are count-driven from the one node count above
-        .localCheckpoint(false)
+        // hints are count-driven from the one node count above. The
+        // LAST round is eager: it runs every pending round now, while
+        // the edge/outdeg/node caches below are still persisted, not
+        // at the caller's first action after they are dropped
+        .localCheckpoint(eager = round == iters)
     }
     e.unpersist(); outdeg.unpersist(); nodes.unpersist()
     ranks
@@ -113,7 +116,7 @@ object PageRank {
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
     val outdegB = JoinHints.maybeBroadcast(outdeg, nRows)
     var ranks = tpNodes.select(col("node"), col("tp").as("rank"))
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { round =>
       val ranksB = JoinHints.maybeBroadcast(ranks, nRows)
       val dangling = ranks.join(outdegB, ranks("node") === outdeg("src"),
           "left_anti")
@@ -130,8 +133,8 @@ object PageRank {
           (lit(1 - damping) * col("tp") + lit(damping) *
             (coalesce(col("contrib"), lit(0.0)) + col("dm") * col("tp")))
             .as("rank"))
-        // lazy per-round cut, same reasoning as [[run]]
-        .localCheckpoint(false)
+        // lazy per-round cut, eager last round: same reasoning as [[run]]
+        .localCheckpoint(eager = round == iters)
     }
     e.unpersist(); outdeg.unpersist(); tpNodes.unpersist(); src.unpersist()
     ranks

@@ -6,20 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for suites (one JVM-wide session; Spark reuses
   * it across suites via getOrCreate). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = LocalSpark(4)
   val sfDir = "/root/testdata/sf0.001"
 }
 

@@ -4,9 +4,8 @@ import graft.SparkSpec
 import graft.api.dsl._
 import graft.rel._
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Meter
 import org.apache.spark.sql.functions.{col => c0}
 
 class GraftApiSpec extends SparkSpec {
@@ -88,31 +87,6 @@ class GraftApiSpec extends SparkSpec {
       li.selectCols(startsWith("no_such_prefix")))
   }
 
-  /** The result of `body` and the Spark jobs it ran on this thread,
-    * counted by a listener after the bus has delivered every event. */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"graft-api-jobs-${System.nanoTime}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group)) {
-          n.incrementAndGet(); ()
-        }
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "graft api job count")
-    try {
-      val r = body
-      org.apache.spark.sql.graft.ListenerDrain(sc)
-      (r, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
-
   /** `df`'s rows as sorted strings, for order-free comparison. */
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -159,7 +133,7 @@ class GraftApiSpec extends SparkSpec {
     "and later builder calls run no Spark job") {
     val g = session
     // one schema-inference job per scan, none for any builder call
-    val (q3, composeJobs) = jobsIn {
+    val (q3, compose) = Meter(spark.sparkContext) {
       g.readParquet(s"$sfDir/lineitem.parquet")
         .join(g.readParquet(s"$sfDir/orders.parquet")
           .filter(c("o_orderdate") < L("1995-03-15", "date")),
@@ -175,9 +149,9 @@ class GraftApiSpec extends SparkSpec {
         .orderBy(desc(c("revenue")), asc(c("l_orderkey")))
         .limit(10)
     }
-    assert(composeJobs == 3)
+    assert(compose.jobs == 3)
 
-    val (deeper, deeperJobs) = jobsIn {
+    val (deeper, deeperRun) = Meter(spark.sparkContext) {
       q3.filter(c("revenue") > d(0.0))
         .select("k" -> c("l_orderkey"), "r" -> c("revenue"))
         .tag("stage", "report")
@@ -185,7 +159,7 @@ class GraftApiSpec extends SparkSpec {
         .limit(5)
         .distinct
     }
-    assert(deeperJobs == 0)
+    assert(deeperRun.jobs == 0)
     assert(deeper.schema.fieldNames.toSeq == Seq("k", "r"))
     // cache/tag/tee add no analysis: they return their input's frame
     assert(q3.cache().df eq q3.df)

@@ -198,6 +198,21 @@ class CacheSpec extends SparkSpec {
     assert(mgr.misses == 2)
   }
 
+  test("an exchange artifact is named by the mtime key, and the orphan " +
+    "sweep's possible keys are the snapshot and mtime keys") {
+    val root = Files.createTempDirectory("graft_cache_exch_").toString
+    val mgr = new CacheManager(spark, Map.empty,
+      exchanges = Map("warehouse" -> root))
+    val input = Filter(ScanParquet(s"$sfDir/nation.parquet"),
+      RBin(">", RCol("n_nationkey"), RLit("3", "int")))
+    assert(mgr.resolve(Exchange(input, "warehouse")) ==
+      ScanParquet(s"$root/${mgr.key(input, "mtime")}"))
+    assert(new java.io.File(root).list().toSeq ==
+      Seq(mgr.key(input, "mtime")))
+    assert(mgr.possibleKeys(input) ==
+      Set(mgr.key(input, "snapshot"), mgr.key(input, "mtime")))
+  }
+
   test("hit and miss counters stay exact under concurrent resolve") {
     // a store that only records keys: no Spark job per miss, so many
     // resolves contend on the counters at once

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.graft.Meter
 
 class LabelPropSpec extends SparkSpec {
   private val sp = spark
@@ -34,6 +35,15 @@ class LabelPropSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     // x sees {a, b} exactly once each despite duplicates → min label a
     assert(l1("x") == "a")
+  }
+
+  test("every round runs before the call returns: collecting the " +
+    "labels is one job with no shuffle read") {
+    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"))
+      .toDF("src", "dst")
+    val labels = LabelProp.run(edges, iters = 3)
+    val (_, m) = Meter(spark.sparkContext)(labels.collect())
+    assert(m.jobs == 1 && m.shuffleReadBytes == 0, m.summary)
   }
 
   test("iters must be positive") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.graft.Meter
 
 /** PageRank semantics on a hand-computable graph: one round against
   * closed-form values (incl. dangling-mass redistribution — node c has
@@ -28,6 +29,18 @@ class PageRankSpec extends SparkSpec {
   test("total mass stays 1 across rounds") {
     val total = PageRank.run(edges, iters = 3).collect().map(_.getDouble(1)).sum
     assert(math.abs(total - 1.0) < 1e-9)
+  }
+
+  test("every round runs before the call returns: collecting the ranks " +
+    "is one job with no shuffle read") {
+    val s = spark
+    import s.implicits._
+    val sources = Seq("a").toDF("node")
+    Seq(PageRank.run(edges, iters = 3),
+        PageRank.personalized(edges, sources, iters = 3)).foreach { ranks =>
+      val (_, m) = Meter(spark.sparkContext)(ranks.collect())
+      assert(m.jobs == 1 && m.shuffleReadBytes == 0, m.summary)
+    }
   }
 
   test("argument validation fails loud") {

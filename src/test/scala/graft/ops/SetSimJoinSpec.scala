@@ -59,24 +59,14 @@ class SetSimJoinSpec extends SparkSpec {
 
   test("construction runs NO Spark job (deferred; r5 verdict #5), and " +
     "release() drops the intermediate caches") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val pairs = SetSimJoin.jaccardSelfJoin(rows, "id", "st", 0.5)
-      Thread.sleep(500) // let any (unexpected) job event reach the bus
-      assert(jobs.get() == 0,
-        s"construction must not execute jobs, ran ${jobs.get()}")
-      pairs.df.count()
-      pairs.release()
-      // the released intermediates are gone; the result itself stays
-      // cached and still answers
-      assert(pairs.df.count() > 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (pairs, m) = org.apache.spark.sql.graft.Meter(spark.sparkContext)(
+      SetSimJoin.jaccardSelfJoin(rows, "id", "st", 0.5))
+    assert(m.jobs == 0, s"construction must not execute jobs, ran ${m.jobs}")
+    pairs.df.count()
+    pairs.release()
+    // the released intermediates are gone; the result itself stays
+    // cached and still answers
+    assert(pairs.df.count() > 0)
   }
 
   test("checkpointed variants match the lazy path and return a plan " +
