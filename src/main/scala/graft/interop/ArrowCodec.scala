@@ -9,6 +9,7 @@ import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema =
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
 import org.apache.arrow.vector.util.Text
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import java.io.ByteArrayOutputStream
 import java.nio.channels.Channels
@@ -169,8 +170,11 @@ object ArrowCodec {
       case d: LocalDate => x.setSafe(i, d.toEpochDay.toInt)
     }
     case (x: TimeStampMicroTZVector, TimestampType) =>
-      val t = v.asInstanceOf[java.sql.Timestamp]
-      x.setSafe(i, t.getTime * 1000L + (t.getNanos % 1000000) / 1000L)
+      // Spark's own Timestamp → micros conversion (Arrow and Spark count
+      // proleptic Gregorian micros; a java.sql.Timestamp before
+      // 1582-10-15 reads in the hybrid Julian calendar)
+      x.setSafe(i, DateTimeUtils.fromJavaTimestamp(
+        v.asInstanceOf[java.sql.Timestamp]))
     case (x: TimeStampMicroVector, TimestampNTZType) =>
       val t = v.asInstanceOf[LocalDateTime]
       x.setSafe(i, t.toEpochSecond(ZoneOffset.UTC) * 1000000L +
@@ -296,10 +300,7 @@ object ArrowCodec {
       case (x: DateDayVector, DateType) =>
         java.sql.Date.valueOf(LocalDate.ofEpochDay(x.get(i)))
       case (x: TimeStampMicroTZVector, TimestampType) =>
-        val micros = x.get(i)
-        val t = new java.sql.Timestamp(Math.floorDiv(micros, 1000L))
-        t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-        t
+        DateTimeUtils.toJavaTimestamp(x.get(i))
       case (x: TimeStampMicroVector, TimestampNTZType) =>
         val micros = x.get(i)
         LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),

@@ -2,8 +2,11 @@ package graft.interop
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.graft.ArrowLocal
+import java.io.{ByteArrayOutputStream, OutputStream}
+import scala.jdk.CollectionConverters._
 
 /** Distributed Arrow IPC directory source/sink — the interchange data
   * plane next to parquet (the reference moves every result as Arrow:
@@ -52,24 +55,36 @@ object ArrowIpc {
     spark.read.format("arrow-ipc").load(path)
   }
 
-  /** Collect `df` into ONE in-memory IPC stream — the `to_pyarrow`
-    * driver-side convenience (and the serve transport's inline data
-    * plane). For big results use [[write]]; this materializes on the
-    * driver by design. */
+  /** Write `df` to `out` as one Arrow IPC stream of record batches of
+    * at most `batchRows` rows — the serve plane's one encode path (the
+    * inline `/run` response, the `/exchange` response and [[toBytes]]).
+    * A plan Catalyst folded into driver-local rows (`LocalTableScanExec`,
+    * e.g. a filter/project over a [[fromBytes]] body) is taken with
+    * `collect()`, which runs no Spark job. Any other plan streams
+    * through `toLocalIterator`, one partition per job, so memory stays
+    * bounded by one partition plus one batch whatever the result size. */
+  def writeStream(df: DataFrame, out: OutputStream,
+      batchRows: Int = 4096): Unit = {
+    val rows = df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => df.collect().iterator
+      case _ => df.toLocalIterator().asScala
+    }
+    ArrowCodec.encodeTo(df.schema, rows, out, batchRows)
+  }
+
+  /** [[writeStream]] into ONE in-memory IPC stream — the `to_pyarrow`
+    * driver-side convenience. For big results use [[write]]; this
+    * materializes on the driver by design. */
   def toBytes(df: DataFrame): Array[Byte] = {
-    import scala.jdk.CollectionConverters._
-    ArrowCodec.encode(df.schema, df.toLocalIterator().asScala)
+    val bytes = new ByteArrayOutputStream()
+    writeStream(df, bytes)
+    bytes.toByteArray
   }
 
-  /** Parse one IPC stream into a (driver-local) DataFrame. */
-  def fromBytes(spark: SparkSession, bytes: Array[Byte]): DataFrame = {
-    val (schema, rows) = ArrowCodec.decode(bytes)
-    fromRows(spark, schema, rows.toSeq)
-  }
-
-  private def fromRows(spark: SparkSession, schema: StructType,
-      rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(rows).asJava), schema)
+  /** Decode one IPC stream, column by column, into a driver-local frame
+    * over a `LocalRelation` ([[org.apache.spark.sql.graft.ArrowLocal]]).
+    * Bytes that are not an Arrow IPC stream throw
+    * `IllegalArgumentException` with the decoder's message. */
+  def fromBytes(spark: SparkSession, bytes: Array[Byte]): DataFrame =
+    ArrowLocal.fromIPC(spark, bytes)
 }

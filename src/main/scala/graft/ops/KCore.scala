@@ -81,7 +81,7 @@ object KCore {
     require(k >= 1, s"k must be >= 1, got $k")
     // FUSED per-round materialization (r16, the Bfs/Components seam):
     // lazy checkpoint + the convergence count the loop already takes
-    // run as ONE job where eager-checkpoint-then-count paid two, and
+    // run one job fewer than eager-checkpoint-then-count, and
     // the leaf keeps exact measured stats for downstream planning
     val ckc = org.apache.spark.sql.graft.StatsCheckpoint
       .localCheckpointWithStatsAndCount(_)

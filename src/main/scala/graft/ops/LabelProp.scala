@@ -33,7 +33,7 @@ object LabelProp {
       .filter(col("src") =!= col("dst"))
       .repartition(col("dst")).dropDuplicates("src", "dst").persist()
     // FUSED init: lazy checkpoint + the node count the hints need —
-    // one job instead of eager-checkpoint-then-count's two (r16)
+    // one job fewer than eager-checkpoint-then-count (r16)
     val (labels0, nodeN) = org.apache.spark.sql.graft.StatsCheckpoint
       .localCheckpointWithStatsAndCount(
         e.select(col("src").as("node")).distinct()
@@ -50,11 +50,11 @@ object LabelProp {
         .withColumn("__rn", row_number().over(byCount))
         .filter(col("__rn") === 1)
         .select(col("node"), col("label"))
-        // lazy per-round cut: materializes inside the next round's
-        // label-vector broadcast build instead of a dedicated job
-        // (the PageRank r16 pattern); hints stay count-driven. The
-        // last round is eager, so every round runs before `e` is
-        // unpersisted below
+        // lazy per-round cut (the PageRank pattern): under AQE the
+        // round's shuffle stages run at call time and only its last
+        // stage is deferred into the next round's label-vector
+        // broadcast build; hints stay count-driven. The last round is
+        // eager, so every stage runs before `e` is unpersisted below
         .localCheckpoint(eager = round == iters)
     }
     e.unpersist()

@@ -69,16 +69,18 @@ object PageRank {
           (lit((1 - damping) / n) + lit(damping) *
             (coalesce(col("contrib"), lit(0.0)) + col("dm") / n))
             .as("rank"))
-        // LAZY checkpoint (r16, guide §2.4 fused actions): the round
-        // still computes exactly once and cuts lineage, but it
-        // materializes inside the NEXT round's first consumer job
-        // (the rank-vector broadcast build / dangling aggregate)
-        // instead of paying a dedicated eager job per round; the
-        // join decisions don't need leaf stats — the rank/contrib
-        // hints are count-driven from the one node count above. The
-        // LAST round is eager: it runs every pending round now, while
-        // the edge/outdeg/node caches below are still persisted, not
-        // at the caller's first action after they are dropped
+        // LAZY checkpoint: the round computes exactly once and cuts
+        // lineage. Under AQE a lazy `localCheckpoint` still runs every
+        // shuffle stage of the round at call time (Dataset.checkpoint
+        // executes the adaptive plan, which materializes its query
+        // stages); only the round's last stage is deferred into the
+        // next round's first consumer job (the rank-vector broadcast
+        // build / dangling aggregate). The join decisions don't need
+        // leaf stats — the rank/contrib hints are count-driven from the
+        // one node count above. The LAST round is eager, so its final
+        // stage also runs while the edge/outdeg/node caches below are
+        // still persisted, not at the caller's first action after they
+        // are dropped (MeterSpec pins the AQE behaviour)
         .localCheckpoint(eager = round == iters)
     }
     e.unpersist(); outdeg.unpersist(); nodes.unpersist()
@@ -133,7 +135,8 @@ object PageRank {
           (lit(1 - damping) * col("tp") + lit(damping) *
             (coalesce(col("contrib"), lit(0.0)) + col("dm") * col("tp")))
             .as("rank"))
-        // lazy per-round cut, eager last round: same reasoning as [[run]]
+        // lazy per-round cut (shuffle stages run at call time, the last
+        // stage is deferred), eager last round: same reasoning as [[run]]
         .localCheckpoint(eager = round == iters)
     }
     e.unpersist(); outdeg.unpersist(); tpNodes.unpersist(); src.unpersist()

@@ -3,7 +3,7 @@ package graft.serve
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer,
   HttpsConfigurator, HttpsParameters, HttpsServer}
 import graft.rel.{RelHash, RelJson}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import javax.net.ssl.{KeyManagerFactory, SSLContext, TrustManagerFactory}
@@ -41,9 +41,17 @@ import javax.net.ssl.{KeyManagerFactory, SSLContext, TrustManagerFactory}
   *                                no `"out"` at all the result comes
   *                                back INLINE as one Arrow IPC stream
   *                                in the response body (the
-  *                                `to_pyarrow` wire contract — small
-  *                                results only, it materializes on
-  *                                the server driver).
+  *                                `to_pyarrow` wire contract),
+  *                                streamed in `batch_rows` record
+  *                                batches one partition at a time.
+  *
+  * Both Arrow responses go through [[graft.interop.ArrowIpc.writeStream]].
+  * An `/exchange` body decodes column by column into a driver-local
+  * relation; when Catalyst folds the served plan over it back into
+  * local rows (a filter or projection of the body), the response is
+  * taken with `collect()` and runs no Spark job. Other plans (an
+  * aggregate, a parquet-bound `/run`) stream one partition per job,
+  * so server memory stays bounded by one partition plus one batch.
   *
   * Auth: pass `secret = Some(token)` and EVERY endpoint requires
   * `Authorization: Bearer <token>` (constant-time compare via
@@ -136,38 +144,32 @@ final class HttpServe(registry: Registry, spark: SparkSession,
           if (req.contains("format") && format != "arrow")
             throw new IllegalArgumentException(
               s"inline response is arrow-only; format '$format' requires \"out\"")
-          // STREAMED chunked-transfer encode (approximates Flight
-          // do_exchange's incremental batch semantics over HTTP, ref
-          // flight/exchanger.py:62-117): toLocalIterator pulls ONE
-          // partition at a time from the cluster and the encoder emits
-          // record batches of `batch_rows` as they fill — server memory
-          // is bounded by one partition + one batch no matter the
-          // result size, and the client decodes batch-by-batch off the
-          // live socket. Planning faults still 400/500 (the plan is
-          // analyzed before headers go out); a mid-stream task fault
-          // truncates the IPC stream, which every Arrow reader surfaces
-          // loudly.
+          // chunked-transfer encode (approximates Flight do_exchange's
+          // incremental batch semantics over HTTP, ref
+          // flight/exchanger.py:62-117): record batches of `batch_rows`
+          // go out as they fill and the client decodes batch by batch
+          // off the live socket (ArrowIpc.writeStream bounds server
+          // memory). Planning faults still 400/500 (the plan is analyzed
+          // before headers go out); a mid-stream task fault truncates
+          // the IPC stream, which every Arrow reader surfaces loudly.
           val batchRows = req.get("batch_rows")
             .map(_.asInstanceOf[Number].intValue).getOrElse(4096)
           require(batchRows > 0, s"batch_rows must be positive: $batchRows")
-          val schema = df.schema
           df.queryExecution.assertAnalyzed() // fail BEFORE headers
-          Chunked("application/vnd.apache.arrow.stream", out => {
-            import scala.jdk.CollectionConverters._
-            graft.interop.ArrowCodec.encodeTo(
-              schema, df.toLocalIterator().asScala, out, batchRows)
-          })
+          arrowStream(df, batchRows)
       }
     })
     server.createContext("/exchange/", bytesHandler { (ex, bodyBytes) =>
       // the do_exchange analogue (ref flight/exchanger.py:119-392):
       // request body = one Arrow IPC stream (the input table), response
       // = the served plan's output as a CHUNKED Arrow IPC stream —
-      // upload, transform, download in one round trip with the result
-      // never materialized server-side. The input decodes to an
-      // in-memory relation (the exchange contract ships the data WITH
-      // the call; callers with cluster-scale inputs use /run's
-      // shared-storage bindings instead).
+      // upload, transform, download in one round trip. The body decodes
+      // column by column into an in-memory relation (the exchange
+      // contract ships the data WITH the call; callers with
+      // cluster-scale inputs use /run's shared-storage bindings
+      // instead), so a filter/project plan over it folds to local rows
+      // and answers without a Spark job. A body that is not an Arrow
+      // IPC stream is the caller's fault: 400 with the decoder's message.
       val name = ex.getRequestURI.getPath.stripPrefix("/exchange/")
       require(bodyBytes.nonEmpty,
         "exchange needs an Arrow IPC stream as the request body")
@@ -179,13 +181,7 @@ final class HttpServe(registry: Registry, spark: SparkSession,
       val batchRows = params.get("batch_rows").map(_.toInt).getOrElse(4096)
       require(batchRows > 0, s"batch_rows must be positive: $batchRows")
       val in = graft.interop.ArrowIpc.fromBytes(spark, bodyBytes)
-      val df = registry.call(name, Map(binding -> in))
-      val schema = df.schema
-      Chunked("application/vnd.apache.arrow.stream", out => {
-        import scala.jdk.CollectionConverters._
-        graft.interop.ArrowCodec.encodeTo(
-          schema, df.toLocalIterator().asScala, out, batchRows)
-      })
+      arrowStream(registry.call(name, Map(binding -> in)), batchRows)
     })
     server.setExecutor(null) // serial — Spark drives the real work
     server.start()
@@ -204,6 +200,10 @@ final class HttpServe(registry: Registry, spark: SparkSession,
       contentType: String) extends Resp
   private final case class Chunked(contentType: String,
       write: java.io.OutputStream => Unit) extends Resp
+
+  private def arrowStream(df: DataFrame, batchRows: Int): Resp =
+    Chunked("application/vnd.apache.arrow.stream",
+      out => graft.interop.ArrowIpc.writeStream(df, out, batchRows))
 
   private def json(code: Int, body: String): Resp =
     Full(code, body.getBytes(UTF_8), "application/json")

@@ -39,11 +39,13 @@ object StatsCheckpoint {
 
   /** FUSED lazy-localCheckpoint + count: marks the plan's RDD for local
     * checkpointing, then materializes it with the count action the
-    * caller needed anyway — ONE job where eager-checkpoint-then-count
-    * paid two (the iterative loops' per-round cadence: BFS level
-    * emptiness checks, star-contraction fingerprints). Returns the
-    * stats-carrying leaf plus the exact row count, and attaches the
-    * rowCount to the statistics for free. */
+    * caller needed anyway — one job fewer than
+    * eager-checkpoint-then-count (the iterative loops' per-round
+    * cadence: BFS level emptiness checks, star-contraction
+    * fingerprints). Under AQE the lazy checkpoint itself runs the
+    * plan's shuffle stages at call time; only the last stage waits for
+    * the count. Returns the stats-carrying leaf plus the exact row
+    * count, and attaches the rowCount to the statistics for free. */
   def localCheckpointWithStatsAndCount(df: DataFrame): (DataFrame, Long) = {
     val ck = df.localCheckpoint(false)
     val n = ck.count()

@@ -42,4 +42,20 @@ class MeterSpec extends SparkSpec {
       assert(sc.getLocalProperty("spark.jobGroup.id") == "outer")
     } finally sc.clearJobGroup()
   }
+
+  test("under AQE a lazy localCheckpoint runs its shuffle stages at " +
+    "call time; only the last stage waits for the first action") {
+    val sc = spark.sparkContext
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val counts = spark.range(0, 100, 1, 4)
+      .groupBy((org.apache.spark.sql.functions.col("id") % 3).as("k"))
+      .count()
+    val (ck, atCall) = Meter(sc)(counts.localCheckpoint(eager = false))
+    assert(atCall.jobs >= 1, atCall.summary)
+    assert(atCall.shuffleWriteBytes > 0, atCall.summary)
+    val (n, atAction) = Meter(sc)(ck.collect().length)
+    assert(n == 3)
+    assert(atAction.jobs == 1 && atAction.shuffleWriteBytes == 0,
+      atAction.summary)
+  }
 }

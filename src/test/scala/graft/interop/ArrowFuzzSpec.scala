@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * decode must reproduce schema and values exactly for random schemas
   * over every supported type, random null patterns, adversarial
   * strings, and empty batches — plus the projected-decode path used by
-  * the DSv2 reader. Pure codec fuzz, no SparkSession. */
+  * the DSv2 reader. The last case checks the columnar decode
+  * ([[ArrowIpc.fromBytes]], Spark's own converters) against the row
+  * codec on the same streams, through the shared test session. */
 class ArrowFuzzSpec extends AnyFunSuite {
 
   private val nastyString: Gen[String] = Gen.oneOf(
@@ -22,7 +24,8 @@ class ArrowFuzzSpec extends AnyFunSuite {
   private val scalarTypes: Seq[DataType] = Seq(
     BooleanType, ByteType, ShortType, IntegerType, LongType,
     FloatType, DoubleType, StringType, BinaryType, DateType,
-    TimestampType, TimestampNTZType, DecimalType(12, 2))
+    TimestampType, TimestampNTZType, DecimalType(12, 2),
+    DecimalType(38, 18))
 
   private val genType: Gen[DataType] = Gen.frequency(
     6 -> Gen.oneOf(scalarTypes),
@@ -69,8 +72,15 @@ class ArrowFuzzSpec extends AnyFunSuite {
 
   private def genRow(schema: StructType): Gen[Row] =
     Gen.sequence[Seq[Any], Any](schema.fields.map(f =>
-      Gen.frequency(4 -> genValue(f.dataType), 1 -> Gen.const(null))))
+      if (f.nullable)
+        Gen.frequency(4 -> genValue(f.dataType), 1 -> Gen.const(null))
+      else genValue(f.dataType)))
       .map(Row.fromSeq)
+
+  private def decimal(x: Any): BigDecimal = x match {
+    case d: java.math.BigDecimal => BigDecimal(d)
+    case d: BigDecimal => d
+  }
 
   private def sameValue(dt: DataType, a: Any, b: Any): Boolean =
     (a, b) match {
@@ -85,10 +95,10 @@ class ArrowFuzzSpec extends AnyFunSuite {
         case DoubleType =>
           java.lang.Double.compare(a.asInstanceOf[Double],
             b.asInstanceOf[Double]) == 0
-        case _: DecimalType =>
-          a.asInstanceOf[BigDecimal].compare(b.asInstanceOf[BigDecimal]) == 0
+        case _: DecimalType => decimal(a).compare(decimal(b)) == 0
         case ArrayType(e, _) =>
-          val (x, y) = (a.asInstanceOf[Seq[Any]], b.asInstanceOf[Seq[Any]])
+          val (x, y) = (a.asInstanceOf[scala.collection.Seq[Any]],
+            b.asInstanceOf[scala.collection.Seq[Any]])
           x.length == y.length &&
             x.zip(y).forall { case (u, v) => sameValue(e, u, v) }
         case _ => a == b
@@ -142,6 +152,68 @@ class ArrowFuzzSpec extends AnyFunSuite {
         case None =>
       }
       seed = seed.next
+    }
+  }
+
+  test("columnar decode equals the row codec: random schemas (incl. " +
+    "non-nullable fields), 0-row and multi-batch streams, NaN/-0.0, " +
+    "TimestampNTZ and decimals (200 cases)") {
+    val spark = graft.SparkSpec.spark
+    val params = Gen.Parameters.default
+    var seed = rng.Seed(11L)
+    var checked = 0
+    var (empty, multiBatch, negZero, nan, ntz, dec, strictArray) =
+      (0, 0, 0, 0, 0, 0, 0)
+    while (checked < 200) {
+      val sampled = for {
+        schema <- genSchema
+        strict <- Gen.listOfN(schema.length, Gen.oneOf(true, false))
+        n <- Gen.frequency(4 -> Gen.choose(1, 40), 1 -> Gen.const(0))
+        s = StructType(schema.fields.zip(strict).map { case (f, st) =>
+          f.copy(nullable = !st) })
+        rows <- Gen.listOfN(n, genRow(s))
+      } yield (s, rows)
+      sampled.apply(params, seed) match {
+        case Some((schema, rows)) =>
+          val bytes = ArrowCodec.encode(schema, rows.iterator, batchRows = 7)
+          val (codecSchema, codecRows) = ArrowCodec.decode(bytes)
+          val expect = codecRows.toSeq
+          val df = ArrowIpc.fromBytes(spark, bytes)
+          assert(df.schema == codecSchema, s"schema drift: ${df.schema}")
+          assert(codecSchema == schema)
+          val got = df.collect().toSeq
+          assert(got.length == expect.length)
+          expect.zip(got).foreach { case (e, g) =>
+            schema.fields.zipWithIndex.foreach { case (f, i) =>
+              assert(sameValue(f.dataType, e.get(i), g.get(i)),
+                s"${f.name}:${f.dataType} ${e.get(i)} != ${g.get(i)}")
+            }
+          }
+          // coverage of the cases the columnar path must not drift on
+          if (rows.isEmpty) empty += 1
+          if (rows.length > 7) multiBatch += 1
+          val values = got.flatMap(_.toSeq)
+          if (values.exists {
+              case d: Double => d == 0.0 && 1 / d < 0
+              case f: Float => f == 0.0f && 1 / f < 0
+              case _ => false }) negZero += 1
+          if (values.exists {
+              case d: Double => d.isNaN
+              case f: Float => f.isNaN
+              case _ => false }) nan += 1
+          if (schema.exists(_.dataType == TimestampNTZType)) ntz += 1
+          if (schema.exists(_.dataType.isInstanceOf[DecimalType])) dec += 1
+          if (schema.exists(f => !f.nullable &&
+              f.dataType.isInstanceOf[ArrayType])) strictArray += 1
+          checked += 1
+        case None =>
+      }
+      seed = seed.next
+    }
+    Seq("0-row" -> empty, "multi-batch" -> multiBatch, "-0.0" -> negZero,
+      "NaN" -> nan, "TimestampNTZ" -> ntz, "decimal" -> dec,
+      "non-nullable array" -> strictArray).foreach { case (what, k) =>
+      assert(k > 0, s"no $what case among the 200")
     }
   }
 }

@@ -69,6 +69,29 @@ class ArrowSpec extends SparkSpec {
     assert(got.head.getTimestamp(0) == t)
   }
 
+  test("timestamps and dates before the Gregorian cutover cross the " +
+    "codec and the columnar decode as Spark converts them") {
+    val sp = spark
+    val schema = StructType(Seq(StructField("t", TimestampType),
+      StructField("d", DateType)))
+    val rows = Seq(
+      Row(java.sql.Timestamp.valueOf("1000-03-01 12:00:00.000001"),
+        java.sql.Date.valueOf("1000-03-01")),
+      Row(java.sql.Timestamp.valueOf("1582-10-04 23:59:59"),
+        java.sql.Date.valueOf("1582-10-04")),
+      Row(java.sql.Timestamp.valueOf("2024-06-01 12:34:56.123456"),
+        java.sql.Date.valueOf("2024-06-01")))
+    val bytes = ArrowCodec.encode(schema, rows.iterator)
+    assert(ArrowCodec.decode(bytes)._2.toSeq == rows)
+    val viaSpark = sp.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema)
+    val decoded = ArrowIpc.fromBytes(sp, bytes)
+    assert(decoded.collect().toSeq == rows)
+    val internal = Seq(unix_micros(col("t")), unix_date(col("d")))
+    assert(decoded.select(internal: _*).collect().toSeq ==
+      viaSpark.select(internal: _*).collect().toSeq)
+  }
+
   test("distributed IPC directory write/read preserves data across " +
     "many partitions (incl. empty ones)") {
     val sp = spark
@@ -231,5 +254,53 @@ class ArrowSpec extends SparkSpec {
     val back = ArrowIpc.fromBytes(sp, ArrowIpc.toBytes(df))
     assert(back.schema == df.schema)
     assert(back.collect().toSet == df.collect().toSet)
+  }
+
+  test("writeStream: a filter/project over fromBytes runs no Spark job; " +
+    "an aggregate runs no more jobs than toLocalIterator; a parquet " +
+    "passthrough runs the same per-partition jobs") {
+    import org.apache.spark.sql.graft.Meter
+    import scala.jdk.CollectionConverters._
+    val sp = spark
+    val sc = sp.sparkContext
+    val lineitem = sp.read.parquet(s"$sfDir/lineitem.parquet")
+    val body = ArrowCodec.encode(lineitem.schema, lineitem.collect().iterator)
+    // each leg gets a fresh frame: re-running one AQE plan reuses its
+    // finished shuffle stages and would undercount the second leg
+    def pass() = ArrowIpc.fromBytes(sp, body)
+      .filter(col("l_quantity") >= 30)
+      .select(col("l_orderkey"), (col("l_extendedprice") * 2).as("p"))
+    def agg() = ArrowIpc.fromBytes(sp, body).groupBy("l_returnflag")
+      .agg(count(lit(1)).as("n"), sum("l_quantity").as("q"))
+    def scan() = sp.read.parquet(s"$sfDir/lineitem.parquet")
+      .filter(col("l_quantity") >= 30).select("l_orderkey", "l_quantity")
+    def stream(df: org.apache.spark.sql.DataFrame) = Meter(sc) {
+      val out = new java.io.ByteArrayOutputStream()
+      ArrowIpc.writeStream(df, out, batchRows = 64)
+      ArrowCodec.decode(out.toByteArray)._2.toSeq
+    }
+    // the encode every response took before: one job per partition
+    def perPartition(df: org.apache.spark.sql.DataFrame) = Meter(sc) {
+      ArrowCodec.decode(ArrowCodec.encode(df.schema,
+        df.toLocalIterator().asScala, 64))._2.toSeq
+    }
+    def rows(rs: Seq[Row]) = rs.map(_.toString).sorted
+
+    val (p, mp) = stream(pass())
+    assert(mp.jobs == 0 && mp.tasks == 0, mp.summary)
+    assert(rows(p) == rows(pass().collect().toSeq))
+    val (_, mpOld) = perPartition(pass())
+    assert(mpOld.jobs > 0, mpOld.summary)
+
+    val (a, ma) = stream(agg())
+    val (aOld, maOld) = perPartition(agg())
+    assert(ma.jobs <= maOld.jobs, s"${ma.summary} vs ${maOld.summary}")
+    assert(rows(a) == rows(aOld))
+
+    val (s0, ms) = stream(scan())
+    val (sOld, msOld) = perPartition(scan())
+    assert(ms.jobs == msOld.jobs && ms.jobs > 0,
+      s"${ms.summary} vs ${msOld.summary}")
+    assert(rows(s0) == rows(sOld))
   }
 }

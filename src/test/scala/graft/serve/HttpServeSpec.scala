@@ -166,6 +166,52 @@ class HttpServeSpec extends SparkSpec {
       c3.setRequestMethod("POST"); c3.setDoOutput(true)
       c3.getOutputStream.close()
       assert(c3.getResponseCode == 400)
+
+      // a body that is not an Arrow IPC stream is the caller's fault:
+      // 400 carrying the decoder's message, not a 500
+      val c4 = new java.net.URL(s"http://127.0.0.1:$port/exchange/cnt")
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      c4.setRequestMethod("POST"); c4.setDoOutput(true)
+      c4.getOutputStream.write("not an arrow stream".getBytes("UTF-8"))
+      assert(c4.getResponseCode == 400)
+      val err = new String(c4.getErrorStream.readAllBytes(), "UTF-8")
+      assert(err.contains("not an Arrow IPC stream"), err)
+    } finally http.stop()
+  }
+
+  test("exchange of a passthrough plan and of an aggregate plan equals " +
+    "an in-process Registry.call on the same input") {
+    val registry = new Registry(spark)
+    val input = UnboundTable("input", Nil)
+    registry.servePlan("pass", Project(
+      Filter(input, RBin(">=", RCol("l_quantity"), RLit("30", "DOUBLE"))),
+      Seq("k" -> RCol("l_orderkey"), "q" -> RCol("l_quantity"))))
+    registry.servePlan("agg", Aggregate(input,
+      keys = Seq("f" -> RCol("l_returnflag")),
+      aggs = Seq("n" -> RAgg("count", Nil),
+        "q" -> RAgg("sum", Seq(RCol("l_quantity"))))))
+    val http = new HttpServe(registry, spark)
+    val port = http.start()
+    try {
+      val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val reqBytes = graft.interop.ArrowCodec.encode(lineitem.schema,
+        lineitem.collect().iterator)
+      Seq("pass", "agg").foreach { plan =>
+        val conn = new java.net.URL(
+          s"http://127.0.0.1:$port/exchange/$plan?batch_rows=100")
+          .openConnection().asInstanceOf[java.net.HttpURLConnection]
+        conn.setRequestMethod("POST"); conn.setDoOutput(true)
+        conn.getOutputStream.write(reqBytes)
+        assert(conn.getResponseCode == 200, plan)
+        val (schema, rows) = graft.interop.ArrowCodec.decode(
+          conn.getInputStream.readAllBytes())
+        val want = registry.call(plan, Map("input" ->
+          graft.interop.ArrowIpc.fromBytes(spark, reqBytes)))
+        assert(schema == want.schema, plan)
+        val got = rows.map(_.toString).toSeq.sorted
+        assert(got.nonEmpty, plan)
+        assert(got == want.collect().map(_.toString).toSeq.sorted, plan)
+      }
     } finally http.stop()
   }
 
