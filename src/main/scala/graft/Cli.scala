@@ -50,7 +50,7 @@ object Cli {
       val df = new graft.api.GraftSession(spark,
         functions = graft.udf.Builtins.catalog).execute(rel)
       df.write.mode("overwrite").parquet(out)
-      println(s"""{"hash":"$hash","rows":${spark.read.parquet(out).count()},"out":"$out"}""")
+      println(s"""{"hash":"$hash","rows":${interop.ParquetRead.read(spark, out).count()},"out":"$out"}""")
       spark.stop()
 
     case "alias" :: dir :: name :: hash :: Nil =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Loaders for the driver's TPC-H-ish testdata (TESTDATA.md).
   *
   * Every table is a plain parquet file at `$sfDir/$name.parquet`. We read
-  * them lazily through `spark.read.parquet` so Catalyst gets the parquet
+  * them lazily through [[interop.ParquetRead]] so Catalyst gets the parquet
   * footer schema and can push filters / prune columns into the scan — at
   * 100 TB the scan is the dominant cost and pushdown is the first-order
   * optimization.
@@ -16,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = interop.ParquetRead.read(spark, s"$sfDir/$name.parquet")
     if (name == "events") fixNanosTs(df) else df
   }
 

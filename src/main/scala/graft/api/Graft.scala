@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.StructType
   * Validation is incremental: a call lowers only the node it adds, on
   * top of the already-analyzed frames of its input tables, so each
   * call analyzes one new plan node (none for the transparent
-  * `cache`/`tag`/`tee`) and each leaf scan — whose parquet schema
-  * inference is a Spark job — is resolved once per composition, not
-  * once per later call. Execution still lowers the whole plan afresh,
-  * after cache resolution ([[GraftTable.execute]]).
+  * `cache`/`tag`/`tee`) and each leaf scan is resolved once per
+  * composition, not once per later call. A parquet leaf's schema comes
+  * from one footer read on the driver ([[graft.interop.ParquetRead]]),
+  * so composing runs no Spark job. Execution still lowers the whole
+  * plan afresh, after cache resolution ([[GraftTable.execute]]).
   *
   * A [[GraftSession]] owns the Spark session, the unbound-table
   * bindings, and the cache storages; tables flow through the algebra so

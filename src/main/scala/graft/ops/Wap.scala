@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.interop.ParquetRead
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -66,7 +67,7 @@ object Wap {
     require(!fs.exists(version), s"version token $tok already published")
 
     df.write.mode("overwrite").parquet(staging.toString)
-    val staged = spark.read.parquet(staging.toString)
+    val staged = ParquetRead.read(spark, staging.toString)
     val violations = audit(staged).take(5)
     if (violations.nonEmpty)
       throw new AuditFailedException(sink, tok,
@@ -109,7 +110,7 @@ object Wap {
   def readCurrent(spark: SparkSession, sink: String): DataFrame = {
     val tok = current(spark, sink).getOrElse(
       throw new IllegalArgumentException(s"nothing published at $sink"))
-    spark.read.parquet(s"$sink/v_$tok")
+    ParquetRead.read(spark, s"$sink/v_$tok")
   }
 
   /** The path of the live published version directory. */

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
+import graft.interop.ParquetRead
 import graft.rel._
 import org.apache.spark.sql.functions._
 
@@ -131,7 +132,7 @@ object SourceQueries {
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_orderpriority"))
         .write.mode("overwrite").parquet(out + "/batch=2")
-      c.spark.read.option("mergeSchema", "true").parquet(out)
+      ParquetRead.read(c.spark, out, "mergeSchema" -> "true")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("o_orderpriority").isNull, 1L).otherwise(0L))
@@ -171,7 +172,7 @@ object SourceQueries {
         .parquet(out)
       finally restated.sparkSession.conf
         .set("spark.sql.sources.partitionOverwriteMode", "static")
-      c.spark.read.parquet(out)
+      ParquetRead.read(c.spark, out)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
         .orderBy("o_orderstatus")
@@ -190,7 +191,7 @@ object SourceQueries {
       c.lineitem
         .select("l_returnflag", "l_linestatus", "l_quantity")
         .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-      c.spark.read.parquet(out)
+      ParquetRead.read(c.spark, out)
         .filter(col("l_returnflag") === "R") // directory-pruned
         .groupBy("l_linestatus")
         .agg(count(lit(1)).as("n"), r2(sum(col("l_quantity"))).as("qty"))
@@ -234,7 +235,7 @@ object SourceQueries {
       graft.ops.ZOrder.writeParquet(
         c.lineitem.select("l_linestatus", "l_quantity", "l_extendedprice"),
         out, Seq("l_quantity", "l_extendedprice"), bits = 7, partitions = 8)
-      c.spark.read.parquet(out)
+      ParquetRead.read(c.spark, out)
         .filter(col("l_quantity").between(10, 20) &&
           col("l_extendedprice").between(10000, 30000))
         .groupBy("l_linestatus")
@@ -292,7 +293,7 @@ object SourceQueries {
         Seq(SortKey(RCol("l_returnflag"), true, true)))
       val result = new graft.api.GraftSession(c.spark).execute(rel)
       // write-through contract: the sink holds exactly the teed rows
-      require(c.spark.read.parquet(sink).count() ==
+      require(ParquetRead.read(c.spark, sink).count() ==
         c.lineitem.filter(col("l_quantity") > 45).count(),
         "tee sink row count mismatch")
       result

@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.interop.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -32,7 +33,7 @@ final class Lower(
       .getOrElse(lowerNode(rel))
 
   private def lowerNode(rel: Rel): DataFrame = rel match {
-    case ScanParquet(path) => spark.read.parquet(path)
+    case ScanParquet(path) => ParquetRead.read(spark, path)
 
     case ScanArrow(path) => graft.interop.ArrowIpc.read(spark, path)
 
@@ -112,7 +113,7 @@ final class Lower(
       graft.ops.AsofJoin.backward(lower(l), lower(r), on, lt, rt,
         rightCols, tol.map(expr))
 
-    case PinnedRead(path, _) => spark.read.parquet(path)
+    case PinnedRead(path, _) => ParquetRead.read(spark, path)
 
     case Project(in, exprs) =>
       lower(in).select(exprs.map { case (n, e) => toCol(e).as(n) }: _*)

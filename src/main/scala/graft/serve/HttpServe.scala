@@ -2,6 +2,7 @@ package graft.serve
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer,
   HttpsConfigurator, HttpsParameters, HttpsServer}
+import graft.interop.ParquetRead
 import graft.rel.{RelHash, RelJson}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
@@ -119,7 +120,7 @@ final class HttpServe(registry: Registry, spark: SparkSession,
       val req = RelJson.parseAny(body).asInstanceOf[Map[String, Any]]
       val bindings = req.getOrElse("bindings", Map.empty[String, Any])
         .asInstanceOf[Map[String, Any]]
-        .map { case (t, p) => t -> spark.read.parquet(p.asInstanceOf[String]) }
+        .map { case (t, p) => t -> ParquetRead.read(spark, p.asInstanceOf[String]) }
       val df = registry.call(name, bindings)
       val format = req.getOrElse("format", "parquet").asInstanceOf[String]
       req.get("out").map(_.asInstanceOf[String]) match {
@@ -127,7 +128,7 @@ final class HttpServe(registry: Registry, spark: SparkSession,
           val rows = format match {
             case "parquet" =>
               df.write.mode("overwrite").parquet(out)
-              spark.read.parquet(out).count()
+              ParquetRead.read(spark, out).count()
             case "arrow" =>
               graft.interop.ArrowIpc.write(df, out)
               graft.interop.ArrowIpc.read(spark, out).count()

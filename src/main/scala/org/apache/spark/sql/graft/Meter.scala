@@ -53,13 +53,24 @@ object Meter {
     * caller's job group is restored afterwards. Throws a
     * `TimeoutException` if the listener bus does not drain within 30 s
     * — a loud failure, never a short count. */
-  def apply[T](sc: SparkContext)(body: => T): (T, Counts) = {
+  def apply[T](sc: SparkContext)(body: => T): (T, Counts) =
+    metered(sc, anyThread = false)(body)
+
+  /** [[apply]], but counting the jobs of every thread while `body`
+    * runs: for work on a thread that inherits no job group, such as an
+    * HTTP server's dispatcher. Exact only while nothing else runs
+    * Spark jobs. */
+  def anyThread[T](sc: SparkContext)(body: => T): (T, Counts) =
+    metered(sc, anyThread = true)(body)
+
+  private def metered[T](sc: SparkContext, anyThread: Boolean)(
+      body: => T): (T, Counts) = {
     val group = s"graft-meter-${java.util.UUID.randomUUID}"
     val keys = Seq(SparkContext.SPARK_JOB_GROUP_ID,
       SparkContext.SPARK_JOB_DESCRIPTION,
       SparkContext.SPARK_JOB_INTERRUPT_ON_CANCEL)
     val saved = keys.map(k => k -> sc.getLocalProperty(k))
-    val l = new GroupListener(group)
+    val l = new GroupListener(if (anyThread) None else Some(group))
     sc.addSparkListener(l)
     sc.setJobGroup(group, "graft meter")
     try {
@@ -74,14 +85,16 @@ object Meter {
     }
   }
 
-  private final class GroupListener(group: String) extends SparkListener {
+  /** Counts the jobs carrying `group`, or every job when it is None. */
+  private final class GroupListener(group: Option[String])
+      extends SparkListener {
     val jobs = new AtomicInteger
     val completed = new ConcurrentLinkedQueue[StageInfo]
     private val stageIds = ConcurrentHashMap.newKeySet[Int]()
 
     override def onJobStart(j: SparkListenerJobStart): Unit =
-      if (Option(j.properties).exists(
-          _.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)) {
+      if (group.forall(g => Option(j.properties).exists(
+          _.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == g))) {
         jobs.incrementAndGet()
         j.stageIds.foreach(stageIds.add)
       }

@@ -43,6 +43,18 @@ class MeterSpec extends SparkSpec {
     } finally sc.clearJobGroup()
   }
 
+  test("anyThread counts a job that another thread starts during the " +
+    "block") {
+    val sc = spark.sparkContext
+    val (n, m) = Meter.anyThread(sc) {
+      val other = new Thread(() => { sc.parallelize(1 to 10, 3).count(); () })
+      other.start(); other.join()
+      sc.parallelize(1 to 10, 2).count()
+    }
+    assert(n == 10)
+    assert(m.jobs == 2 && m.stages.size == 2 && m.tasks == 5, m.summary)
+  }
+
   test("under AQE a lazy localCheckpoint runs its shuffle stages at " +
     "call time; only the last stage waits for the first action") {
     val sc = spark.sparkContext

@@ -129,10 +129,9 @@ class GraftApiSpec extends SparkSpec {
     }
   }
 
-  test("construction is linear: each parquet scan is inferred once, " +
-    "and later builder calls run no Spark job") {
+  test("construction is linear and job-free: a parquet scan's schema " +
+    "comes from its footer, and no builder call runs a Spark job") {
     val g = session
-    // one schema-inference job per scan, none for any builder call
     val (q3, compose) = Meter(spark.sparkContext) {
       g.readParquet(s"$sfDir/lineitem.parquet")
         .join(g.readParquet(s"$sfDir/orders.parquet")
@@ -149,7 +148,7 @@ class GraftApiSpec extends SparkSpec {
         .orderBy(desc(c("revenue")), asc(c("l_orderkey")))
         .limit(10)
     }
-    assert(compose.jobs == 3)
+    assert(compose.jobs == 0)
 
     val (deeper, deeperRun) = Meter(spark.sparkContext) {
       q3.filter(c("revenue") > d(0.0))
@@ -166,6 +165,32 @@ class GraftApiSpec extends SparkSpec {
     assert(q3.tag("k", "v").df eq q3.df)
     assert(q3.tee(s"${Files.createTempDirectory("graft_tee_")}/s").df eq
       q3.df)
+  }
+
+  test("a cache hit: execute() runs no job, and collect() runs only " +
+    "the jobs of the same query over the artifact") {
+    val root = Files.createTempDirectory("graft_api_hit_").toString
+    val g = new GraftSession(spark, storages = Map("default" ->
+      new graft.cache.ParquetDirStorage(spark, root)))
+    val t = g.readParquet(s"$sfDir/lineitem.parquet")
+      .groupBy("f" -> c("l_returnflag"))("n" -> countAll)
+      .cache()
+      .filter(c("n") > i(0))
+    val want = t.execute().collect().map(_.toString).sorted // the miss
+    assert(g.cacheManager.misses == 1)
+
+    val (df, exec) = Meter(spark.sparkContext)(t.execute())
+    assert(g.cacheManager.hits == 1)
+    assert(exec.jobs == 0, s"execute() on a hit ran ${exec.jobs} jobs")
+    val (got, act) = Meter(spark.sparkContext)(df.collect())
+    assert(got.map(_.toString).sorted.sameElements(want))
+
+    val artifact = Files.list(java.nio.file.Paths.get(root))
+      .findFirst().get.toString
+    val direct = spark.read.parquet(artifact).filter(c0("n") > 0)
+    val (_, plain) = Meter(spark.sparkContext)(direct.collect())
+    assert(act.jobs == plain.jobs,
+      s"collect() ran ${act.jobs} jobs, the plain query ${plain.jobs}")
   }
 
   test("inputs that share a frame (union with itself, self-join, a " +

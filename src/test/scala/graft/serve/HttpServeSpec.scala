@@ -3,6 +3,7 @@ package graft.serve
 import graft.SparkSpec
 import graft.rel._
 import java.nio.file.Files
+import org.apache.spark.sql.graft.Meter
 import scala.sys.process._
 
 /** e2e: plans served in THIS JVM are listed, fetched, registered, and
@@ -213,6 +214,42 @@ class HttpServeSpec extends SparkSpec {
         assert(got == want.collect().map(_.toString).toSeq.sorted, plan)
       }
     } finally http.stop()
+  }
+
+  test("a parquet-bound /run binding reads with no Spark job: the " +
+    "request runs only its result's jobs and returns Registry.call's rows") {
+    val registry = new Registry(spark)
+    registry.servePlan("pass", Project(
+      Filter(UnboundTable("src", Nil),
+        RBin(">=", RCol("l_quantity"), RLit("30", "DOUBLE"))),
+      Seq("k" -> RCol("l_orderkey"), "q" -> RCol("l_quantity"))))
+    val path = s"$sfDir/lineitem.parquet"
+    // the handler runs on the server's dispatcher thread, which
+    // carries no job group: count every thread's jobs
+    val (body, served) = Meter.anyThread(spark.sparkContext) {
+      val http = new HttpServe(registry, spark)
+      val port = http.start()
+      try {
+        val conn = new java.net.URL(s"http://127.0.0.1:$port/run/pass")
+          .openConnection().asInstanceOf[java.net.HttpURLConnection]
+        conn.setRequestMethod("POST"); conn.setDoOutput(true)
+        conn.getOutputStream.write(
+          s"""{"bindings":{"src":"$path"}}""".getBytes("UTF-8"))
+        assert(conn.getResponseCode == 200)
+        conn.getInputStream.readAllBytes()
+      } finally http.stop()
+    }
+    val want = registry.call("pass", Map("src" -> spark.read.parquet(path)))
+    val (wantBytes, plain) = Meter(spark.sparkContext)(
+      graft.interop.ArrowIpc.toBytes(want))
+    assert(served.jobs == plain.jobs,
+      s"/run ran ${served.jobs} jobs, its result alone ${plain.jobs}")
+    val (schema, rows) = graft.interop.ArrowCodec.decode(body)
+    val (wantSchema, wantRows) = graft.interop.ArrowCodec.decode(wantBytes)
+    assert(schema == wantSchema)
+    val got = rows.map(_.toString).toSeq.sorted
+    assert(got.nonEmpty)
+    assert(got == wantRows.map(_.toString).toSeq.sorted)
   }
 
   test("inline run response is CHUNKED Arrow streaming: batches decode " +
